@@ -2,7 +2,10 @@
 """Local simulation of the driver's correctness gate: run graft.Verify
 first (sbt -batch "runMain graft.Verify <sfDir> <outDir>"), then this
 script compares each outDir/<name> parquet against the DuckDB oracle in
-outDir/oracle_sql.json, with the sf tables registered by name.
+outDir/oracle_sql.json, with the sf tables registered by name. Every
+oracle key with no output directory is reported as missing_output:
+graft.Verify logs and skips a query that throws, so it would otherwise
+vanish from the report. Exits 1 on any red or missing row.
 
 Usage: python3 BENCH/sim_correctness.py <sfDir> <outDir>
 """
@@ -43,6 +46,9 @@ def main(sf_dir, out_dir):
             "hash_match": h_s == h_o, "spark_rows": n_s, "oracle_rows": n_o,
             "types": None if t_s == t_o else {"spark": t_s, "oracle": t_o},
         }
+    for q in oracle:
+        if q not in results:
+            results[q] = {"err": "missing_output"}
     ok = True
     for q, r in sorted(results.items()):
         line = json.dumps({q: r})
@@ -50,6 +56,7 @@ def main(sf_dir, out_dir):
         if r.get("err") or not (r.get("rows_match") and r.get("schema_match") and r.get("hash_match")):
             ok = False
     print("ALL GREEN" if ok else "RED ROWS PRESENT")
+    return 0 if ok else 1
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))

@@ -3,7 +3,7 @@ package graft
 import graft.ops.{Ann, Dedup, TextOps}
 import graft.spark.{Pipeline, Transcripts}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -82,37 +82,47 @@ object SparkEntry {
     * them is immaterial. On a cluster this backfills one job's straggler
     * tail with the next job's tasks; on small inputs it overlaps the
     * fixed per-job cost (planning + scheduling), which dominates there.
+    * One pool thread per job; results come back in argument order.
     */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+  private def overlap[A](jobs: (() => A)*): Seq[A] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.length)
     try {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val (a, b) = (Future(fa), Future(fb))
-      (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf))
+      Await.result(Future.sequence(jobs.map(j => Future(j()))), Duration.Inf)
     } finally pool.shutdown()
   }
-  private def par3[A, B, C](fa: => A, fb: => B, fc: => C): (A, B, C) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val (a, b, c) = (Future(fa), Future(fb), Future(fc))
-      (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf),
-        Await.result(c, Duration.Inf))
-    } finally pool.shutdown()
+
+  /** (rows, distinct conv_ids) of a table read */
+  private def rowsAndConvs(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
+    (r.getLong(0), r.getLong(1))
   }
-  private def par5[A](fs: Seq[() => A]): Seq[A] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.length)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(Future.sequence(fs.map(f => Future(f()))), Duration.Inf)
-    } finally pool.shutdown()
-  }
+
+  /** the extracted `format` a document turn's tool produces */
+  private def toolFormat =
+    when(col("tool") === "pdftohtml", "pdfxml").otherwise("shakespeare").as("format")
+
+  /** The checkpoint and streaming oracles' expectation: one row per
+    * document turn with `cols` and g_lines, its golden line count (0 when
+    * the goldens hold no line for the turn).
+    */
+  private def expectedLines(transcripts: DataFrame, goldens: DataFrame,
+      cols: Column*): DataFrame =
+    transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
+      .select(col("conv_id") +: col("turn_idx") +: cols: _*)
+      .join(goldens.groupBy(col("conv_id"), col("turn_idx")).agg(count(lit(1)).as("g_lines")),
+        Seq("conv_id", "turn_idx"), "left")
+      .na.fill(0L, Seq("g_lines"))
+
+  /** per-bucket turn and line totals of a checkpointed extraction's output */
+  private def bucketCounts(s: SparkSession, out: String): DataFrame =
+    s.read.parquet(s"$out/data")
+      .groupBy(col("bucket").cast("bigint").as("bucket"))
+      .agg(count(lit(1)).as("n_turns"),
+        sum(col("n_lines")).cast("bigint").as("n_lines"))
+      .orderBy(col("bucket"))
 
   /** transcripts scale keyed off the sf directory (deterministic, no I/O) */
   private def nConvsFor(dir: String): Long =
@@ -146,69 +156,76 @@ object SparkEntry {
   }
 
 
-  /** shared body of q38 (classic xref serialization) and q40 (modern
-    * ObjStm + xref-stream serialization): extract the cross-feature PDF
-    * corpus through the lexer and verify per-turn line hashes plus the
-    * doc-level fields against generator-derived goldens, counting
-    * format=='pdf' turns to pin which path produced them
+  /** the line fields q32 hashes, and q35/q38/q40 hash as a prefix of theirs */
+  private val dualFields = Seq("kind", "text", "page_num", "given_page_num",
+    "column", "has_dual", "is_dual")
+
+  /** Turn-level strings the cross-feature goldens carry per line, each
+    * compared alongside the line digest: the revision table, the margin
+    * side-vote table and the three CONTINUED flags.
+    */
+  private val crossTurnCols = Seq("rev_table", "votes", "cont_top", "cont_bottom",
+    "cont_number")
+
+  /** Shared body of q35 and q38/q40: extract the cross-feature corpus
+    * ONCE (the audited invariant: turn-level strings ride alongside the
+    * exploded lines), digest each turn over [[dualFields]] plus each
+    * line's canonical revision-span and attr strings, and full-outer join
+    * with the goldens' digest. Returns one row per turn with the
+    * extracted side's [[crossTurnCols]] and `extra` aggregates, and `ok`
+    * when hash, count and every turn-level string agree.
+    */
+  private def crossVerify(transcripts: DataFrame, goldens: DataFrame,
+      extra: Column*): DataFrame = {
+    // a sorted "key:start-end" list; `key` is the span's weight or attr key
+    def spanStr(c: Column, key: String): Column = array_join(sort_array(
+      transform(c, x => concat(x.getField(key).cast("string"), lit(":"),
+        x.getField("start").cast("string"), lit("-"),
+        x.getField("end").cast("string")))), "|")
+    val lines = Pipeline.extracted(transcripts).select(
+      col("conv_id"), col("turn_idx"),
+      col("ex.format").as("format"),
+      array_join(transform(col("ex.revisions"),
+        (x, i) => concat_ws(":", i.cast("string"), x.getField("name"),
+          x.getField("color"))), ";").as("rev_table"),
+      array_join(transform(col("ex.line_number_sides"),
+        v => concat_ws(":", v.getField("type"), v.getField("left").cast("string"),
+          v.getField("right").cast("string"))), ";").as("votes"),
+      col("ex.scene_continued_top").as("cont_top"),
+      col("ex.scene_continued_bottom").as("cont_bottom"),
+      col("ex.scene_continued_number").as("cont_number"),
+      // posexplode_OUTER: the non-outer variant lets
+      // InferFiltersFromGenerate push `size(extract_turn(..).lines) > 0`
+      // below the projection, duplicating the extraction (see
+      // Pipeline.lines); every assistant doc has lines, so the
+      // null-filter restores exact semantics
+      posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
+      .filter(col("line").isNotNull)
+    val a = Pipeline.turnDigest(lines,
+      xxhash64(col("line_idx") +: dualFields.map(f => col(s"line.$f")) :+
+        spanStr(col("line.revs"), "weight") :+ spanStr(col("line.attrs"), "key"): _*),
+      crossTurnCols.map(c => max(col(c)).as(c)) ++ extra: _*)
+    val b = Pipeline.turnDigest(goldens,
+      xxhash64((("line_idx" +: dualFields) :+ "revs" :+ "attrs").map(col): _*),
+      crossTurnCols.map(c => max(col(c)).as(s"g_$c")): _*)
+    Pipeline.joinDigests(a, b).withColumn("ok",
+      crossTurnCols.foldLeft(col("ok"))((ok, c) => ok && (col(c) <=> col(s"g_$c"))))
+  }
+
+  /** q38 (classic xref serialization) and q40 (modern ObjStm +
+    * xref-stream serialization): [[crossVerify]] over the raw-PDF corpus,
+    * counting format=='pdf' turns to pin which path produced them
     */
   private def pdfLexerVerify(s: SparkSession, dir: String, matName: String,
       modern: Boolean): DataFrame = {
     val n = math.min(nConvsFor(dir), 150L)
     val goldens = Transcripts.pdfGoldens(s, n).toDF()
     materialize(goldens, matName)
-    val transcripts = Transcripts.synthesizePdf(s, n, modern = modern).toDF()
-      def spanStr(c: org.apache.spark.sql.Column, mid: String): org.apache.spark.sql.Column = array_join(sort_array(
-        transform(c, x => concat(x.getField("weight").cast("string"), lit(":"),
-          x.getField("start").cast("string"), lit(mid),
-          x.getField("end").cast("string")))), "|")
-      val lines = Pipeline.extracted(transcripts).select(
-        col("conv_id"), col("turn_idx"),
-        col("ex.format").as("format"),
-        array_join(transform(col("ex.revisions"),
-          (x, i) => concat_ws(":", i.cast("string"), x.getField("name"),
-            x.getField("color"))), ";").as("rev_table"),
-        array_join(transform(col("ex.line_number_sides"),
-          v => concat_ws(":", v.getField("type"), v.getField("left").cast("string"),
-            v.getField("right").cast("string"))), ";").as("votes"),
-        col("ex.scene_continued_top").as("cont_top"),
-        col("ex.scene_continued_bottom").as("cont_bottom"),
-        col("ex.scene_continued_number").as("cont_number"),
-        posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
-        .filter(col("line").isNotNull)
-      val a = lines
-        .withColumn("lh", xxhash64(col("line_idx"), col("line.kind"),
-          col("line.text"), col("line.page_num"), col("line.given_page_num"),
-          col("line.column"), col("line.has_dual"), col("line.is_dual"),
-          spanStr(col("line.revs"), "-"),
-          array_join(sort_array(transform(col("line.attrs"),
-            x => concat(x.getField("key"), lit(":"),
-              x.getField("start").cast("string"), lit("-"),
-              x.getField("end").cast("string")))), "|")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("cnt"),
-          max(col("rev_table")).as("rev_table"), max(col("votes")).as("votes"),
-          max(col("cont_top")).as("cont_top"),
-          max(col("cont_bottom")).as("cont_bottom"),
-          max(col("cont_number")).as("cont_number"),
-          max(when(col("format") === "pdf", 1).otherwise(0)).as("is_pdf"))
-      val b = goldens
-        .withColumn("lh", xxhash64(col("line_idx"), col("kind"), col("text"),
-          col("page_num"), col("given_page_num"), col("column"),
-          col("has_dual"), col("is_dual"), col("revs"), col("attrs")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("g_h"), count(lit(1)).as("g_cnt"),
-          max(col("rev_table")).as("g_rev"), max(col("votes")).as("g_votes"),
-          max(col("cont_top")).as("g_ct"), max(col("cont_bottom")).as("g_cb"),
-          max(col("cont_number")).as("g_cn"))
-      a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
-        .agg(count(lit(1)).as("n_turns"),
-          sum(when(col("h") <=> col("g_h") && col("cnt") <=> col("g_cnt") &&
-            col("rev_table") <=> col("g_rev") && col("votes") <=> col("g_votes") &&
-            col("cont_top") <=> col("g_ct") && col("cont_bottom") <=> col("g_cb") &&
-            col("cont_number") <=> col("g_cn"), 1L).otherwise(0L))
-            .cast("bigint").as("n_turns_ok"),
-          coalesce(sum(col("is_pdf")), lit(0)).cast("bigint").as("n_pdf_turns"))
+    crossVerify(Transcripts.synthesizePdf(s, n, modern = modern).toDF(), goldens,
+        max(when(col("format") === "pdf", 1).otherwise(0)).as("is_pdf"))
+      .agg(count(lit(1)).as("n_turns"),
+        sum(when(col("ok"), 1L).otherwise(0L)).cast("bigint").as("n_turns_ok"),
+        coalesce(sum(col("is_pdf")), lit(0)).cast("bigint").as("n_pdf_turns"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -461,26 +478,17 @@ object SparkEntry {
       val goldens = Transcripts.dualGoldens(s, n, seed = 4242L).toDF()
       materialize(goldens, "q32_goldens")
       val transcripts = Transcripts.synthesizeDual(s, n, seed = 4242L).toDF()
-      val lines = Pipeline.lines(Pipeline.extracted(transcripts))
-      val dualFields = Seq("kind", "text", "page_num", "given_page_num",
-        "column", "has_dual", "is_dual")
-      def lh(df: DataFrame) =
-        xxhash64(col("line_idx") +: dualFields.map(col): _*)
       // ONE pass over the extracted lines: the per-turn content digest
       // (verifyByHash's shape, dual fields hashed in) and the extracted
       // dual-flag bit come out of the same aggregation, so extract_turn
       // appears exactly once in the plan (the audited invariant)
-      val a = lines.withColumn("lh", lh(lines))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("cnt"),
-          max(when(col("has_dual"), 1).otherwise(0)).as("hd"))
-      val b = goldens.withColumn("lh", lh(goldens))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("g_h"), count(lit(1)).as("g_cnt"))
-      a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
+      val lh = xxhash64(col("line_idx") +: dualFields.map(col): _*)
+      Pipeline.joinDigests(
+          Pipeline.turnDigest(Pipeline.lines(Pipeline.extracted(transcripts)), lh,
+            max(when(col("has_dual"), 1).otherwise(0)).as("hd")),
+          Pipeline.turnDigest(goldens, lh))
         .agg(count(lit(1)).as("n_turns"),
-          sum(when(col("h") <=> col("g_h") && col("cnt") <=> col("g_cnt"), 1L)
-            .otherwise(0L)).cast("bigint").as("n_turns_ok"),
+          sum(when(col("ok"), 1L).otherwise(0L)).cast("bigint").as("n_turns_ok"),
           coalesce(sum(col("hd")), lit(0)).cast("bigint").as("n_dual_turns"))
     }),
     "q33_revisions" -> ((s, dir) => {
@@ -547,73 +555,18 @@ object SparkEntry {
       // and CONTINUED bands at once — the pass-interaction product space
       // (DualDialog splices blocks the revision walk later attributes,
       // ParseText.php:1412-1563 + Parser.php:239-486) that q32/q33/q34's
-      // isolated corpora cannot see. The per-turn hash covers q32's field
-      // set PLUS each line's canonical revision-span and attr strings;
-      // the turn-level revision table, side-vote table and CONTINUED
-      // flags are compared alongside. Oracle recomputes the counts from
-      // the materialized GOLDENS and expects every turn to verify; the
-      // Spark-side n_dual/n_rev/n_cont counts come from EXTRACTED fields,
-      // proving the corpus carries the features and extraction surfaced
-      // them. ONE extraction pass (the audited invariant): turn-level
-      // strings are carried alongside the exploded lines.
+      // isolated corpora cannot see; verification is [[crossVerify]].
+      // Oracle recomputes the counts from the materialized GOLDENS and
+      // expects every turn to verify; the Spark-side n_dual/n_rev/n_cont
+      // counts come from EXTRACTED fields, proving the corpus carries the
+      // features and extraction surfaced them.
       val n = math.min(nConvsFor(dir), 200L)
       val goldens = Transcripts.crossGoldens(s, n).toDF()
       materialize(goldens, "q35_goldens")
-      val transcripts = Transcripts.synthesizeCross(s, n).toDF()
-      def spanStr(c: org.apache.spark.sql.Column, mid: String): org.apache.spark.sql.Column = array_join(sort_array(
-        transform(c, x => concat(x.getField("weight").cast("string"), lit(":"),
-          x.getField("start").cast("string"), lit(mid),
-          x.getField("end").cast("string")))), "|")
-      val lines = Pipeline.extracted(transcripts).select(
-        col("conv_id"), col("turn_idx"),
-        array_join(transform(col("ex.revisions"),
-          (x, i) => concat_ws(":", i.cast("string"), x.getField("name"),
-            x.getField("color"))), ";").as("rev_table"),
-        array_join(transform(col("ex.line_number_sides"),
-          v => concat_ws(":", v.getField("type"), v.getField("left").cast("string"),
-            v.getField("right").cast("string"))), ";").as("votes"),
-        col("ex.scene_continued_top").as("cont_top"),
-        col("ex.scene_continued_bottom").as("cont_bottom"),
-        col("ex.scene_continued_number").as("cont_number"),
-        // posexplode_OUTER: the non-outer variant lets
-        // InferFiltersFromGenerate push `size(extract_turn(..).lines) > 0`
-        // below the projection, duplicating the extraction (see
-        // Pipeline.lines); every assistant doc has lines, so the
-        // null-filter restores exact semantics
-        posexplode_outer(col("ex.lines")).as(Seq("line_idx", "line")))
-        .filter(col("line").isNotNull)
-      val a = lines
-        .withColumn("lh", xxhash64(col("line_idx"), col("line.kind"),
-          col("line.text"), col("line.page_num"), col("line.given_page_num"),
-          col("line.column"), col("line.has_dual"), col("line.is_dual"),
-          spanStr(col("line.revs"), "-"),
-          array_join(sort_array(transform(col("line.attrs"),
-            x => concat(x.getField("key"), lit(":"),
-              x.getField("start").cast("string"), lit("-"),
-              x.getField("end").cast("string")))), "|")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("cnt"),
-          max(col("rev_table")).as("rev_table"), max(col("votes")).as("votes"),
-          max(col("cont_top")).as("cont_top"),
-          max(col("cont_bottom")).as("cont_bottom"),
-          max(col("cont_number")).as("cont_number"),
+      crossVerify(Transcripts.synthesizeCross(s, n).toDF(), goldens,
           max(when(col("line.has_dual"), 1).otherwise(0)).as("hd"))
-      val b = goldens
-        .withColumn("lh", xxhash64(col("line_idx"), col("kind"), col("text"),
-          col("page_num"), col("given_page_num"), col("column"),
-          col("has_dual"), col("is_dual"), col("revs"), col("attrs")))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("g_h"), count(lit(1)).as("g_cnt"),
-          max(col("rev_table")).as("g_rev"), max(col("votes")).as("g_votes"),
-          max(col("cont_top")).as("g_ct"), max(col("cont_bottom")).as("g_cb"),
-          max(col("cont_number")).as("g_cn"))
-      a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
         .agg(count(lit(1)).as("n_turns"),
-          sum(when(col("h") <=> col("g_h") && col("cnt") <=> col("g_cnt") &&
-            col("rev_table") <=> col("g_rev") && col("votes") <=> col("g_votes") &&
-            col("cont_top") <=> col("g_ct") && col("cont_bottom") <=> col("g_cb") &&
-            col("cont_number") <=> col("g_cn"), 1L).otherwise(0L))
-            .cast("bigint").as("n_turns_ok"),
+          sum(when(col("ok"), 1L).otherwise(0L)).cast("bigint").as("n_turns_ok"),
           coalesce(sum(col("hd")), lit(0)).cast("bigint").as("n_dual_turns"),
           coalesce(sum(when(length(col("rev_table")) > 0, 1).otherwise(0)), lit(0))
             .cast("bigint").as("n_rev_turns"),
@@ -741,21 +694,9 @@ object SparkEntry {
       val c2 = graft.spark.TranscriptTable.extractWithCheckpoints(
         s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets) // all committed
       require(c1 == c2, s"checkpoint resume must be a no-op: $c1 vs $c2")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"),
-            graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q29_expected")
-      s.read.parquet(s"$tmp/out/data")
-        .groupBy(col("bucket").cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n_turns"),
-          sum(col("n_lines")).cast("bigint").as("n_lines"))
-        .orderBy(col("bucket"))
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket")), "q29_expected")
+      bucketCounts(s, s"$tmp/out")
     }),
     "q41_data_skipping" -> ((s, dir) => {
       // File-skipping reads: write the transcripts table in the RANGE
@@ -818,21 +759,10 @@ object SparkEntry {
       val c1 = graft.spark.TranscriptTable.extractWithCheckpoints(
         s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets)
       require(c1.turns > 0, "skew corpus extracted no turns")
-      val goldens = Transcripts.skewedGoldens(s, n, seed = 42L, nBuckets = nBuckets).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"),
-            graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q37_expected")
-      s.read.parquet(s"$tmp/out/data")
-        .groupBy(col("bucket").cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n_turns"),
-          sum(col("n_lines")).cast("bigint").as("n_lines"))
-        .orderBy(col("bucket"))
+      materialize(expectedLines(transcripts,
+        Transcripts.skewedGoldens(s, n, seed = 42L, nBuckets = nBuckets).toDF(),
+        graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket")), "q37_expected")
+      bucketCounts(s, s"$tmp/out")
     }),
     "q36_time_travel" -> ((s, dir) => {
       // Iceberg-style snapshot time travel: write snapshot 1, overwrite
@@ -889,13 +819,12 @@ object SparkEntry {
         .select(xxhash64(cols.map(col): _*).as("lh"))
         .agg(count(lit(1)), expr("bit_xor(lh)"))
         .head()
-      val (r1, r2, digests) = par3(
-        stats(graft.spark.TranscriptTable.readAt(s, root, 1L)),
-        stats(graft.spark.TranscriptTable.read(s, root)),
-        (bucketDigest(graft.spark.TranscriptTable.readAt(s, root, 1L)),
-          bucketDigest(graft.spark.TranscriptTable.read(s, root))))
-      require(digests._1 == digests._2,
-        s"non-overwritten buckets drifted: ${digests._1} vs ${digests._2}")
+      val Seq(r1, r2, d1, d2) = overlap(
+        () => stats(graft.spark.TranscriptTable.readAt(s, root, 1L)),
+        () => stats(graft.spark.TranscriptTable.read(s, root)),
+        () => bucketDigest(graft.spark.TranscriptTable.readAt(s, root, 1L)),
+        () => bucketDigest(graft.spark.TranscriptTable.read(s, root)))
+      require(d1 == d2, s"non-overwritten buckets drifted: $d1 vs $d2")
       // maintenance pass: bin-pack the current snapshot into snapshot 3
       // (Iceberg rewrite_data_files) — fewer files, identical aggregates
       val filesBefore = graft.spark.TranscriptTable.readManifest(root, 2L).length
@@ -929,17 +858,8 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_q23b").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
       transcripts.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"), col("ts"),
-            when(col("tool") === "pdftohtml", "pdfxml")
-              .otherwise("shakespeare").as("format"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q23b_expected")
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        col("ts"), toolFormat), "q23b_expected")
       // stateful stream: size the state-store partition count to the
       // input volume (statePartitionsFor scaladoc) — AQE cannot coalesce
       // stateful streaming exchanges, and 32 near-empty stores paying a
@@ -968,15 +888,8 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_q31").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
       transcripts.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"), col("ts"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q31_expected")
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        col("ts")), "q31_expected")
       // stateful stream: state partitions sized to input volume (see q23b)
       val se = graft.streaming.StreamingExtract
       se.withStatePartitions(s, se.statePartitionsFor(s, s"$tmp/in")) {
@@ -1065,19 +978,15 @@ object SparkEntry {
       // fan-out); the delta windows below then open 8 files, not 32
       tt.append(b2, root, newSnapshotId = 2L, filesPerBucket = 1)
       tt.append(b3, root, newSnapshotId = 3L, filesPerBucket = 1)
-      def cnt(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
       // the five window scans are independent reads of committed
       // snapshots — overlap them (guide §2.6) instead of paying five
       // sequential fixed job costs
-      val Seq(w12, w23, w13, w33, full) = par5(Seq(
-        () => cnt(tt.incrementalRead(s, root, 1L, 2L)),
-        () => cnt(tt.incrementalRead(s, root, 2L, 3L)),
-        () => cnt(tt.incrementalRead(s, root, 1L, 3L)),
-        () => cnt(tt.incrementalRead(s, root, 3L, 3L)),
-        () => cnt(tt.read(s, root))))
+      val Seq(w12, w23, w13, w33, full) = overlap(
+        () => rowsAndConvs(tt.incrementalRead(s, root, 1L, 2L)),
+        () => rowsAndConvs(tt.incrementalRead(s, root, 2L, 3L)),
+        () => rowsAndConvs(tt.incrementalRead(s, root, 1L, 3L)),
+        () => rowsAndConvs(tt.incrementalRead(s, root, 3L, 3L)),
+        () => rowsAndConvs(tt.read(s, root)))
       // snapshot 4 overwrites bucket 0 — delta scans crossing it refuse
       val bucket0 = b1.withColumn("b", tt.bucketCol(8)).filter(col("b") === 0).drop("b")
       tt.overwriteBucket(bucket0.unionByName(bucket0), root, bucket = 0,
@@ -1125,15 +1034,16 @@ object SparkEntry {
       // history walk are independent metadata queries — overlap them
       // (guide §2.6); the per-snapshot files aggregation is ONE job over
       // the unioned files tables instead of one job per snapshot
-      val (snapRows, fileAggs, hist) = par3(
-        tt.snapshotsTable(s, root).collect().sortBy(_.getLong(0)),
-        (1L to 4L).map(id => tt.filesTable(s, root, Some(id)))
+      val Seq(snapRows, fileAggRows, hist) = overlap(
+        () => tt.snapshotsTable(s, root).collect().sortBy(_.getLong(0)),
+        () => (1L to 4L).map(id => tt.filesTable(s, root, Some(id)))
           .reduce(_.unionByName(_))
           .groupBy(col("snapshot_id"))
           .agg(coalesce(sum(col("row_count")), lit(0L)).as("rows"),
             count(lit(1)).as("files"))
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap,
-        tt.historyTable(s, root).collect())
+          .collect(),
+        () => tt.historyTable(s, root).collect())
+      val fileAggs = fileAggRows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       require(snapRows.map(_.getLong(0)).toVector == Vector(1L, 2L, 3L, 4L),
         "snapshots table must list every live snapshot")
       // files ↔ snapshots consistency, per snapshot
@@ -1162,8 +1072,8 @@ object SparkEntry {
       tt.expireSnapshots(root, keep = Set(3L, 4L))
       require(tt.snapshotIds(root) == Vector(3L, 4L),
         "expire must drop snapshots 1 and 2")
-      val (histPost, snapsPost) = par2(
-        tt.historyTable(s, root).count(), tt.snapshotsTable(s, root).count())
+      val Seq(histPost, snapsPost) = overlap(
+        () => tt.historyTable(s, root).count(), () => tt.snapshotsTable(s, root).count())
       require(histPost == 2L, "history stops at an expired parent")
       require(snapsPost == 2L,
         "snapshots table lists only live snapshots after expire")
@@ -1207,10 +1117,6 @@ object SparkEntry {
       val victims = perConv.map(_.getString(0)).sorted.take(3).toSeq
       val before = (perConv.map(_.getLong(1)).sum, perConv.length.toLong)
       val manifestBefore = tt.readManifest(root, 2L)
-      def cnt(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
       val deletedRows = tt.deleteConvIds(s, root, victims, newSnapshotId = 3L)
       // the three post-delete attestations are independent reads of
       // committed snapshots — overlap them (guide §2.6); the victim
@@ -1218,10 +1124,10 @@ object SparkEntry {
       // (readConvIdsAt / readConvIds) instead of full-table scans —
       // pruning is conservative (stats only SKIP provably-clean files,
       // the membership filter stays on), so the counts are identical
-      val (after, victimsAt2, victimsNow) = par3(
-        cnt(tt.read(s, root)),
-        tt.readConvIdsAt(s, root, 2L, victims).count(),
-        tt.readConvIds(s, root, victims).count())
+      val Seq(after, (victimsAt2, _), (victimsNow, _)) = overlap(
+        () => rowsAndConvs(tt.read(s, root)),
+        () => rowsAndConvs(tt.readConvIdsAt(s, root, 2L, victims)),
+        () => rowsAndConvs(tt.readConvIds(s, root, victims)))
       // pruning did its job: most files carried over BY REFERENCE (path
       // identity), only stat-matching candidates were rewritten
       val (cands, totalFiles) = tt.selectFilesForIds(root, 2L, victims)
@@ -1269,8 +1175,7 @@ object SparkEntry {
       all.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
       materialize(
         all.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(when(col("tool") === "pdftohtml", "pdfxml")
-            .otherwise("shakespeare").as("format"), col("text")),
+          .select(toolFormat, col("text")),
         "q30_expected")
       // stateful stream: state partitions sized to input volume (see q23b)
       val se = graft.streaming.StreamingExtract
@@ -1294,17 +1199,8 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_q23").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
       transcripts.coalesce(8).write.mode("overwrite").parquet(s"$tmp/in")
-      val goldens = Transcripts.goldens(s, n, seed = 42L).toDF()
-      val perTurn = goldens.groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("g_lines"))
-      materialize(
-        transcripts.filter(col("tool").isin("pdftohtml", "shakespeare"))
-          .select(col("conv_id"), col("turn_idx"),
-            when(col("tool") === "pdftohtml", "pdfxml")
-              .otherwise("shakespeare").as("format"))
-          .join(perTurn, Seq("conv_id", "turn_idx"), "left")
-          .na.fill(0L, Seq("g_lines")),
-        "q23_expected")
+      materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
+        toolFormat), "q23_expected")
       val q = graft.streaming.StreamingExtract.startParquet(
         graft.streaming.StreamingExtract.extractedStream(
           graft.streaming.StreamingExtract.readTranscripts(s, s"$tmp/in")),

@@ -113,30 +113,44 @@ object Pipeline {
       .agg(min(when(col("ok"), 1).otherwise(0)).as("turn_ok"),
         count(lit(1)).as("n_lines"))
 
+  /** The per-turn digest every hash verification compares: one row per
+    * (conv_id, turn_idx) with h = bit_xor(lineHash) and n = the line
+    * count, plus the `extra` aggregates. `lineHash` must hash line_idx in
+    * (xxhash64(line_idx, fields...)): that keeps the digest
+    * position-sensitive, and because each (line_idx, content) term is
+    * unique per turn, XOR cancellation cannot hide a difference. bit_xor
+    * is overflow-free under ANSI mode and map-side combinable.
+    */
+  def turnDigest(df: DataFrame, lineHash: Column, extra: Column*): DataFrame =
+    df.withColumn("lh", lineHash)
+      .groupBy(col("conv_id"), col("turn_idx"))
+      .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("n") +: extra: _*)
+
   /** Scale-path verification: per-turn content hashes instead of a
-    * per-LINE join. Each side aggregates bit_xor(xxhash64(line_idx,
-    * fields)) per turn — position-sensitive because line_idx is hashed in,
-    * overflow-free under ANSI mode, and each (line_idx, content) term is
-    * unique per turn so XOR cancellation cannot hide differences — then a
-    * turn-level join compares (hash, count). At 10^12 turns this joins
-    * ~70x fewer rows than [[verify]] and the aggregation is map-side
-    * combinable. Returns (conv_id, turn_idx, turn_ok).
+    * per-LINE join. Each side is a [[turnDigest]] over xxhash64(line_idx,
+    * fields), then a turn-level join compares (hash, count). At 10^12
+    * turns this joins ~70x fewer rows than [[verify]]. Returns (conv_id,
+    * turn_idx, turn_ok).
     */
   def verifyByHash(linesDf: DataFrame, goldens: DataFrame,
       fields: Seq[String] = Seq("kind", "text", "page_num", "given_page_num")): DataFrame = {
-    def digest(df: DataFrame): DataFrame =
-      df.withColumn("lh", xxhash64(col("line_idx") +: fields.map(col): _*))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(expr("bit_xor(lh)").as("h"), count(lit(1)).as("n"))
+    val lh = xxhash64(col("line_idx") +: fields.map(col): _*)
     val keyed = Seq("conv_id", "turn_idx", "line_idx") ++ fields
-    val a = digest(linesDf.select(keyed.map(col): _*))
-    val b = digest(goldens.select(keyed.map(col): _*))
-      .withColumnRenamed("h", "g_h").withColumnRenamed("n", "g_n")
-    a.join(b, Seq("conv_id", "turn_idx"), "full_outer")
-      .withColumn("turn_ok",
-        when(col("h") <=> col("g_h") && col("n") <=> col("g_n"), 1).otherwise(0))
+    joinDigests(turnDigest(linesDf.select(keyed.map(col): _*), lh),
+        turnDigest(goldens.select(keyed.map(col): _*), lh))
+      .withColumn("turn_ok", when(col("ok"), 1).otherwise(0))
       .select(col("conv_id"), col("turn_idx"), col("turn_ok"))
   }
+
+  /** Full-outer (conv_id, turn_idx) join of an extracted-side
+    * [[turnDigest]] with the goldens' one, whose h and n become g_h and
+    * g_n, so a turn missing on either side fails. Adds `ok`: hash and
+    * line count both agree.
+    */
+  def joinDigests(digest: DataFrame, goldenDigest: DataFrame): DataFrame =
+    digest.join(goldenDigest.withColumnRenamed("h", "g_h").withColumnRenamed("n", "g_n"),
+        Seq("conv_id", "turn_idx"), "full_outer")
+      .withColumn("ok", col("h") <=> col("g_h") && col("n") <=> col("g_n"))
 
   def extractTurnCol(c: Column): Column = ExtractTurn(c)
 

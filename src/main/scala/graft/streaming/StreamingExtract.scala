@@ -91,25 +91,21 @@ object StreamingExtract {
     * fixed commits per batch for state that fits in one. Derivation:
     * one partition per `bytesPerPartition` of input (default 32 MiB —
     * state is a bounded fraction of input for watermarked ops), clamped
-    * to [1, 4x defaultParallelism]; `SPARK_GRAFT_STREAM_PARTITIONS`
-    * overrides for cluster deployments that know their state size.
+    * to [1, 4x defaultParallelism]. The input is sized through the Hadoop
+    * FileSystem of its URI, so `file:`, HDFS and object-store inputs all
+    * count; an unreadable or missing input gives 1.
     */
   def statePartitionsFor(spark: SparkSession, inputDir: String,
-      bytesPerPartition: Long = 32L << 20): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse {
-      val bytes =
-        try {
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(inputDir))
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator.asScala
-              .filter(p => java.nio.file.Files.isRegularFile(p))
-              .map(p => java.nio.file.Files.size(p)).sum
-          } finally walk.close()
-        } catch { case _: Exception => 0L }
-      val derived = math.max(1L, (bytes + bytesPerPartition - 1) / bytesPerPartition)
-      math.min(derived, spark.sparkContext.defaultParallelism.toLong * 4).toInt
-    }
+      bytesPerPartition: Long = 32L << 20): Int = {
+    val bytes =
+      try {
+        val path = new org.apache.hadoop.fs.Path(inputDir)
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getContentSummary(path).getLength
+      } catch { case _: Exception => 0L }
+    val derived = math.max(1L, (bytes + bytesPerPartition - 1) / bytesPerPartition)
+    math.min(derived, spark.sparkContext.defaultParallelism.toLong * 4).toInt
+  }
 
   /** Run `body` (a streaming-query start + await) with
     * spark.sql.shuffle.partitions pinned to `n`, restoring the session

@@ -513,7 +513,7 @@ class OpsSpec extends AnyFunSuite {
       s"expected late-data drops under bounded triggers: got $gotTurns, no-drop cutoff $wantTurns")
   }
 
-  test("statePartitionsFor derives from input volume, clamped, overridable") {
+  test("statePartitionsFor derives from input volume, clamped, any filesystem URI") {
     val sp = spark
     val dir = java.nio.file.Files.createTempDirectory("graft_spart")
     java.nio.file.Files.write(dir.resolve("a.bin"), new Array[Byte](10 * 1024))
@@ -521,6 +521,9 @@ class OpsSpec extends AnyFunSuite {
     assert(StreamingExtract.statePartitionsFor(sp, dir.toString) == 1)
     // same bytes at 1 KiB per partition -> 10
     assert(StreamingExtract.statePartitionsFor(sp, dir.toString,
+      bytesPerPartition = 1024L) == 10)
+    // a file: URI is sized through its Hadoop FileSystem, not read as a path
+    assert(StreamingExtract.statePartitionsFor(sp, dir.toUri.toString,
       bytesPerPartition = 1024L) == 10)
     // clamp: never exceeds 4x the session parallelism
     val cap = sp.sparkContext.defaultParallelism * 4
