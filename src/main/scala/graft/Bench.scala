@@ -2,7 +2,7 @@ package graft
 
 import graft.spark.{Pipeline, Transcripts}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: times every SparkEntry query at
@@ -216,6 +216,19 @@ object Bench {
     j.toString
   }
 
+  /** One sweep query, run to a count and timed: (seconds, status). The
+    * status is "ok", or "error:<ExceptionClass>" when the query threw; the
+    * time up to the failure is still its leaf time, so the status is what
+    * tells a failed query from a fast one.
+    */
+  def timeQuery(spark: SparkSession, sfDir: String,
+      query: (SparkSession, String) => DataFrame): (Double, String) = {
+    val t0 = System.nanoTime()
+    val status = try { query(spark, sfDir).count(); "ok" }
+      catch { case t: Throwable => s"error:${t.getClass.getName}" }
+    ((System.nanoTime() - t0) / 1e9, status)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -236,21 +249,22 @@ object Bench {
     SparkEntry.prewarm(spark, sfDir)
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> timeQuery(spark, sfDir, fn)
     }
 
     // same measurement after the sweep: quantifies harness-state drift
     val exPost = extractionBench(spark, nConvs, cpus.toInt)
     val calibAfter = calibBurn(cpus.toInt)
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum + ex.runSecs.sum + ex.extractOnlySecs.sum
+    val statuses = results.map { case (k, (_, st)) => "\"" + k + "\":\"" + st + "\"" }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2._1).sum + ex.runSecs.sum + ex.extractOnlySecs.sum
     val json = new StringBuilder
     json ++= "{\"metric\":\"total\",\"value\":" ++= f"$total%.3f"
     json ++= ",\"unit\":\"sec\",\"queries\":" ++= qs
+    json ++= ",\"query_status\":" ++= statuses
     json ++= ",\"sf\":\"" ++= sfDir ++= "\""
     json ++= ",\"extraction\":" ++= extractionJson(ex)
     json ++= ",\"extraction_post_sweep\":" ++= extractionJson(exPost)

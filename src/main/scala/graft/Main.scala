@@ -12,6 +12,9 @@ import org.apache.spark.sql.functions._
   *   spark-submit --class graft.Main <jar> extract <tableRoot> <outRoot> [nBuckets] [maxConcurrent]
   *   spark-submit --class graft.Main <jar> report <outRoot>
   *
+  * `tableRoot` and `outRoot` are plain paths or `file:` URIs
+  * (`file:///tmp/t`); both resolve through Hadoop FileSystem.
+  *
   * `extract` is resumable: rerunning after a failure skips buckets whose
   * checkpoint manifests are committed (TranscriptTable). `maxConcurrent`
   * (default 8) overlaps bucket jobs from a bounded driver pool — the

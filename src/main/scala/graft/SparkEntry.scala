@@ -685,14 +685,16 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_q29").toString
       val transcripts = Transcripts.synthesize(s, n, seed = 42L).toDF()
       graft.spark.TranscriptTable.write(transcripts, s"$tmp/table", nBuckets, snapshotId = 1L)
-      // overlap every bucket job (guide §2.6): the per-bucket fixed cost
-      // (~0.2 s scheduling + manifest commit) dominates small buckets, and
-      // nBuckets concurrent jobs just means all bucket tails backfill each
-      // other; per-bucket manifests keep resume granularity unchanged
+      // overlap bucket jobs (guide §2.6): the per-bucket fixed cost (~0.2 s
+      // scheduling + manifest commit) dominates small buckets, so bucket
+      // tails backfill each other; more concurrent jobs than task slots
+      // only queue, so the pool is capped at the session's parallelism.
+      // Per-bucket manifests keep resume granularity unchanged
+      val slots = math.min(nBuckets, s.sparkContext.defaultParallelism)
       val c1 = graft.spark.TranscriptTable.extractWithCheckpoints(
-        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets)
+        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = slots)
       val c2 = graft.spark.TranscriptTable.extractWithCheckpoints(
-        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets) // all committed
+        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = slots) // all committed
       require(c1 == c2, s"checkpoint resume must be a no-op: $c1 vs $c2")
       materialize(expectedLines(transcripts, Transcripts.goldens(s, n, seed = 42L).toDF(),
         graft.spark.TranscriptTable.bucketCol(nBuckets).as("bucket")), "q29_expected")
@@ -757,7 +759,8 @@ object SparkEntry {
       val transcripts = Transcripts.synthesizeSkewed(s, n, seed = 42L, nBuckets = nBuckets).toDF()
       graft.spark.TranscriptTable.write(transcripts, s"$tmp/table", nBuckets, snapshotId = 1L)
       val c1 = graft.spark.TranscriptTable.extractWithCheckpoints(
-        s, s"$tmp/table", s"$tmp/out", nBuckets, maxConcurrent = nBuckets)
+        s, s"$tmp/table", s"$tmp/out", nBuckets,
+        maxConcurrent = math.min(nBuckets, s.sparkContext.defaultParallelism)) // see q29
       require(c1.turns > 0, "skew corpus extracted no turns")
       materialize(expectedLines(transcripts,
         Transcripts.skewedGoldens(s, n, seed = 42L, nBuckets = nBuckets).toDF(),

@@ -3,10 +3,13 @@ package graft.spark
 import graft.util.Json
 import graft.util.Json.{Arr, Bool, Num, Obj, Str}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-STYLE table layout for the transcripts / extraction tables.
@@ -27,9 +30,15 @@ import scala.jdk.CollectionConverters._
   *                      readable after an overwrite ([[readAt]]) until
   *                      [[expireSnapshots]] garbage-collects it.
   *   - checkpoints:     <root>/metadata/checkpoints/bucket-<b>.json written
-  *                      atomically (tmp + move) per finished partition with
-  *                      lineage (snapshot id, partition spec) and counters
-  *                      (turns parsed, bytes tokenized, mismatches)
+  *                      per finished partition with lineage (snapshot id,
+  *                      partition spec) and counters (turns parsed, bytes
+  *                      tokenized, mismatches)
+  *
+  * A root is a plain path or a filesystem URI (`file:///tmp/t`): every
+  * metadata and data-dir operation resolves through the root's Hadoop
+  * FileSystem, configured from the active session. Every metadata file
+  * lands through one commit helper, [[atomicWrite]] (a uniquely named tmp
+  * file, then a rename over the target).
   *
   * A failed extraction run resumes at partition granularity: buckets with a
   * committed checkpoint manifest are skipped.
@@ -37,13 +46,6 @@ import scala.jdk.CollectionConverters._
 object TranscriptTable {
 
   final case class Counters(turns: Long, bytes: Long, mismatches: Long)
-
-  /** drain a java.nio directory stream and CLOSE it — Files.walk/list
-    * hold an open directory descriptor until closed, and a long-lived
-    * driver calling these per bucket/snapshot would leak them
-    */
-  private def drained[A, B](stream: java.util.stream.Stream[A])(f: Iterator[A] => B): B =
-    try f(stream.iterator.asScala) finally stream.close()
 
   /** One manifest entry: the bucket a data file belongs to, its path
     * relative to the table root, and (when collected at write time)
@@ -58,8 +60,91 @@ object TranscriptTable {
 
   def bucketCol(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int")
 
-  private def snapDataDir(root: String, snapshotId: Long): String =
-    s"$root/data/snap-$snapshotId"
+  /** the active session's Hadoop configuration (a default one when no
+    * session is up); shared and read-only, so no call re-parses the XMLs
+    */
+  private def hadoopConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
+
+  private def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf)
+
+  /** The FS metadata files go through: the raw FS beneath a checksummed
+    * one (the local FS), so they carry no checksum siblings. A sibling is
+    * renamed in a second step, which would let a reader pair a new file
+    * with the old checksum, and reading past a missing one costs a failed
+    * open per file.
+    */
+  private def metaFs(p: Path): FileSystem = fs(p) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
+  private def metaPath(root: String, name: String): Path = new Path(s"$root/metadata/$name")
+
+  private def snapDataDir(root: String, snapshotId: Long): Path =
+    new Path(s"$root/data/snap-$snapshotId")
+
+  private def dropDataDir(root: String, snapshotId: Long): Unit = {
+    val dir = snapDataDir(root, snapshotId)
+    fs(dir).delete(dir, true)
+  }
+
+  private def readJson(p: Path): Json.Value = {
+    val in = metaFs(p).open(p)
+    try Json.parse(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+  }
+
+  /** The `<prefix><n>.json` files directly under `dir`, keyed by n (none
+    * when `dir` is missing).
+    */
+  private def numbered(dir: Path, prefix: String): Vector[(Long, Path)] = {
+    val fs = metaFs(dir)
+    if (!fs.exists(dir)) Vector.empty
+    else fs.listStatus(dir).toVector.map(_.getPath).collect {
+      case p if p.getName.startsWith(prefix) && p.getName.endsWith(".json") =>
+        p.getName.stripPrefix(prefix).stripSuffix(".json").toLong -> p
+    }
+  }
+
+  /** Run `f` over `items` on at most `threads` driver threads, results in
+    * input order. Every job settles before the first failure is rethrown:
+    * a fail-fast wait would return while stragglers are still writing (a
+    * bucket job's bucket=<b> dir), and a caller retrying — the documented
+    * resume flow — could then race a fresh Overwrite against a
+    * straggler's commit.
+    */
+  private def inPool[A, B](threads: Int, items: Seq[A])(f: A => B): Vector[B] =
+    if (threads <= 1 || items.length <= 1) items.map(f).toVector
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(threads, items.length))
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        Await.result(Future.traverse(items.toVector)(a =>
+          Future(f(a)).transform(scala.util.Success(_))), Duration.Inf).map(_.get)
+      } finally pool.shutdown()
+    }
+
+  /** A snapshot's metadata, read once: its bucket count, schema and
+    * manifest.
+    */
+  private final case class Snapshot(id: Long, meta: Json.Value) {
+    def nBuckets: Int = meta("partition_spec")("n_buckets").asInt
+    def schema: String = meta("schema").asString
+    def manifest: Vector[DataFile] = meta("manifest").asArray.map { v =>
+      DataFile(v("bucket").asInt, v("path").asString,
+        v.get("min_conv_id").map(_.asString), v.get("max_conv_id").map(_.asString),
+        v.get("rows").map(_.asLong).getOrElse(-1L))
+    }
+  }
+
+  private def currentId(root: String): Long = currentSnapshotId(root).getOrElse(
+    sys.error(s"no current snapshot at $root (missing metadata/current.json)"))
+
+  private def snapshot(root: String, id: Long): Snapshot = Snapshot(id, snapshotMeta(root, id))
+
+  private def current(root: String): Snapshot = snapshot(root, currentId(root))
 
   /** Snapshot ids are immutable. This must run BEFORE any data write: the
     * parquet writes in [[write]]/[[overwriteBucket]] use SaveMode.Overwrite
@@ -69,9 +154,10 @@ object TranscriptTable {
     * leaving the table unreadable behind a "rejected" write.
     */
   private def requireFreshSnapshot(root: String, snapshotId: Long): Unit = {
-    require(!Files.exists(Paths.get(root, "metadata", s"snapshot-$snapshotId.json")),
+    val dataDir = snapDataDir(root, snapshotId)
+    require(!fs(dataDir).exists(metaPath(root, s"snapshot-$snapshotId.json")),
       s"snapshot $snapshotId already exists at $root — snapshot ids are immutable, use a new id")
-    require(!Files.exists(Paths.get(snapDataDir(root, snapshotId))),
+    require(!fs(dataDir).exists(dataDir),
       s"data dir for snapshot $snapshotId already exists at $root — " +
         "snapshot ids are immutable (a failed write may have left the dir; remove it explicitly)")
   }
@@ -80,18 +166,19 @@ object TranscriptTable {
     * root-relative paths; bucket parsed from the `bucket=N` path segment.
     */
   private def listDataFiles(root: String, snapshotId: Long): Vector[DataFile] = {
-    val base = Paths.get(snapDataDir(root, snapshotId))
-    if (!Files.isDirectory(base)) return Vector.empty
-    val rootPath = Paths.get(root)
-    val out = drained(Files.walk(base)) { it =>
-      it.filter(p => p.toString.endsWith(".parquet"))
-        .map { p =>
-          val rel = rootPath.relativize(p).toString
-          val bucket = p.getParent.getFileName.toString.stripPrefix("bucket=").toInt
-          DataFile(bucket, rel)
-        }.toVector
-    }
-    out.sortBy(_.path)
+    val base = snapDataDir(root, snapshotId)
+    val fs = this.fs(base)
+    if (!fs.exists(base)) return Vector.empty
+    val rootDir = fs.makeQualified(new Path(root)).toUri.getPath.stripSuffix("/") + "/"
+    // listStatus, not listFiles: a located status reads each file's owner
+    // and permissions, which without the native library forks one `ls`
+    // per file on the local FS
+    def walk(dir: Path): Vector[Path] = fs.listStatus(dir).toVector.flatMap(s =>
+      if (s.isDirectory) walk(s.getPath) else Vector(s.getPath))
+    walk(base).filter(_.getName.endsWith(".parquet"))
+      .map(p => DataFile(p.getParent.getName.stripPrefix("bucket=").toInt,
+        p.toUri.getPath.stripPrefix(rootDir)))
+      .sortBy(_.path)
   }
 
   /** UTF-8 binary comparison — the ordering parquet stats, Spark string
@@ -111,10 +198,9 @@ object TranscriptTable {
     * bound, which is exactly what range pruning needs. Files whose footer
     * has no usable conv_id stats stay unpruned.
     */
-  private def footerStats(root: String, f: DataFile,
-      conf: org.apache.hadoop.conf.Configuration): DataFile = try {
+  private def footerStats(root: String, f: DataFile, conf: Configuration): DataFile = try {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(s"$root/${f.path}"), conf)
+      new Path(s"$root/${f.path}"), conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       var mn: String = null
@@ -147,33 +233,47 @@ object TranscriptTable {
     * opens on the driver
     */
   private def withStats(root: String, files: Vector[DataFile]): Vector[DataFile] = {
-    // one shared (read-only) Configuration: constructing it per file
-    // re-parses the Hadoop default XMLs a thousand times on a big commit
-    val conf = new org.apache.hadoop.conf.Configuration()
-    if (files.length <= 4) files.map(f => footerStats(root, f, conf))
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.length))
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.traverse(files)(f => Future(footerStats(root, f, conf))),
-          Duration.Inf)
-      } finally pool.shutdown()
-    }
+    val conf = hadoopConf
+    inPool(16, files)(footerStats(root, _, conf))
   }
+
+  /** Land `df` (carrying its `bucket` column) as snapshot `snapshotId`'s
+    * data files and return them, with footer stats. An input that lands no
+    * file leaves no data dir behind, so the id stays usable.
+    */
+  private def land(df: DataFrame, root: String, snapshotId: Long): Vector[DataFile] = {
+    df.sortWithinPartitions("conv_id", "turn_idx") // stable order within files
+      .write.mode(SaveMode.Overwrite)
+      // CPU-sized row groups: a parquet file only splits at ROW-GROUP
+      // boundaries, so with the 128 MB default one skew-heavy bucket file
+      // is ONE scan task no matter what maxPartitionBytes says — measured
+      // 2.6x (salted) / 7.1x (unsalted) wall vs a uniform layout on the
+      // 50x-skew corpus (graft.ScalingSkew). 4 MiB groups restore
+      // byte-range parallelism inside big files; see BENCH/BASELINE.md.
+      .option("parquet.block.size", (4 * 1024 * 1024).toString)
+      .partitionBy("bucket")
+      .parquet(snapDataDir(root, snapshotId).toString)
+    val files = listDataFiles(root, snapshotId)
+    if (files.isEmpty) dropDataDir(root, snapshotId)
+    withStats(root, files)
+  }
+
+  /** the salted within-bucket layout: a hash salt spreads each bucket's
+    * conversations over `filesPerBucket` files
+    */
+  private def salted(df: DataFrame, nBuckets: Int, filesPerBucket: Int): DataFrame =
+    df.withColumn("bucket", bucketCol(nBuckets))
+      .repartition(nBuckets * filesPerBucket, col("bucket"),
+        pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
 
   private def writeSnapshot(root: String, snapshotId: Long, nBuckets: Int,
       schemaJson: String, manifest: Vector[DataFile],
       operation: String = "overwrite", parent: Option[Long] = None): Unit = {
-    val meta = Paths.get(root, "metadata")
-    Files.createDirectories(meta)
+    val snapPath = metaPath(root, s"snapshot-$snapshotId.json")
     // defense in depth: writers call requireFreshSnapshot BEFORE the data
     // write (the load-bearing guard); this re-check catches a concurrent
     // writer that raced past the first one
-    require(!Files.exists(meta.resolve(s"snapshot-$snapshotId.json")),
+    require(!fs(snapPath).exists(snapPath),
       s"snapshot $snapshotId already exists at $root — snapshot ids are immutable, use a new id")
     val snap = Obj.of(
       Vector[(String, Json.Value)](
@@ -204,8 +304,8 @@ object TranscriptTable {
           })
         Obj.of(base ++ stats: _*)
       }.toVector)): _*)
-    atomicWrite(meta.resolve(s"snapshot-$snapshotId.json"), Json.write(snap))
-    atomicWrite(meta.resolve("current.json"),
+    atomicWrite(snapPath, Json.write(snap))
+    atomicWrite(metaPath(root, "current.json"),
       Json.write(Obj.of("current_snapshot_id" -> Num(snapshotId.toDouble))))
   }
 
@@ -237,29 +337,14 @@ object TranscriptTable {
     // stamps "replace").
     val op = if (operation.nonEmpty) operation
              else if (parentId.isEmpty) "append" else "overwrite"
-    val withBucket = df.withColumn("bucket", bucketCol(nBuckets))
     val split = layout match {
-      case "salted" => withBucket
-        .repartition(nBuckets * filesPerBucket, col("bucket"),
-          pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      case "range" => withBucket
+      case "salted" => salted(df, nBuckets, filesPerBucket)
+      case "range" => df.withColumn("bucket", bucketCol(nBuckets))
         .repartitionByRange(nBuckets * filesPerBucket, col("bucket"), col("conv_id"))
       case other => sys.error(s"unknown layout '$other' (salted | range)")
     }
-    split
-      .sortWithinPartitions("conv_id", "turn_idx") // stable order within files
-      .write.mode(SaveMode.Overwrite)
-      // CPU-sized row groups: a parquet file only splits at ROW-GROUP
-      // boundaries, so with the 128 MB default one skew-heavy bucket file
-      // is ONE scan task no matter what maxPartitionBytes says — measured
-      // 2.6x (salted) / 7.1x (unsalted) wall vs a uniform layout on the
-      // 50x-skew corpus (graft.ScalingSkew). 4 MiB groups restore
-      // byte-range parallelism inside big files; see BENCH/BASELINE.md.
-      .option("parquet.block.size", (4 * 1024 * 1024).toString)
-      .partitionBy("bucket")
-      .parquet(snapDataDir(root, snapshotId))
     writeSnapshot(root, snapshotId, nBuckets, df.schema.json,
-      withStats(root, listDataFiles(root, snapshotId)), op, parentId)
+      land(split, root, snapshotId), op, parentId)
   }
 
   /** Iceberg-style partition overwrite: replace ONE bucket's data in a NEW
@@ -278,50 +363,34 @@ object TranscriptTable {
       newSnapshotId: Long, filesPerBucket: Int = 4,
       allowEmpty: Boolean = false): Unit = {
     requireFreshSnapshot(root, newSnapshotId)
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    val cur = snapshotMeta(root, curId)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
+    val cur = current(root)
     // total/matched counters ride the write itself (one pass, no recount)
-    val obs = org.apache.spark.sql.Observation(s"graft_ow_${newSnapshotId}_b$bucket")
-    df.withColumn("bucket", bucketCol(nBuckets))
+    val obs = Observation(s"graft_ow_${newSnapshotId}_b$bucket")
+    val newFiles = land(df.withColumn("bucket", bucketCol(cur.nBuckets))
       .observe(obs, count(lit(1)).as("total"),
         coalesce(sum(when(col("bucket") === bucket, 1L).otherwise(0L)), lit(0L))
           .as("matched"))
       .filter(col("bucket") === bucket)
       .repartition(filesPerBucket,
-        pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", (4 * 1024 * 1024).toString) // see write()
-      .partitionBy("bucket")
-      .parquet(snapDataDir(root, newSnapshotId))
+        pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket))), root, newSnapshotId)
     // emptiness check rides the OUTPUT, not the observation: partitionBy
     // writes no parquet files for zero rows, and precisely in that case AQE
     // prunes the CollectMetrics node from the final plan (empty-relation
     // propagation) so the observation map comes back EMPTY — the metrics
-    // are only a best-effort dropped-rows warning below
-    val newFiles = listDataFiles(root, newSnapshotId)
-    if (newFiles.isEmpty && !allowEmpty) {
-      // nothing committed yet (no snapshot json, current.json untouched);
-      // remove the orphan data dir so the id stays usable after the caller
-      // fixes their input
-      val dir = Paths.get(snapDataDir(root, newSnapshotId))
-      if (Files.isDirectory(dir)) drained(Files.walk(dir)) {
-        _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
+    // are only a best-effort dropped-rows warning below. Nothing is
+    // committed yet and land() removed the empty data dir, so the id stays
+    // usable after the caller fixes their input.
+    if (newFiles.isEmpty && !allowEmpty)
       sys.error(s"overwriteBucket: no input row hashes to bucket $bucket — " +
         s"refusing to silently drop the bucket from snapshot $newSnapshotId; " +
         "pass allowEmpty = true to empty it intentionally")
-    }
     val m = obs.get
     for (t <- m.get("total").map(_.asInstanceOf[Long]);
          mt <- m.get("matched").map(_.asInstanceOf[Long]); if mt < t)
       Console.err.println(s"[TranscriptTable] overwriteBucket: ${t - mt} " +
         s"of $t input rows hash outside bucket $bucket and were dropped")
-    val kept = readManifest(root, curId).filterNot(_.bucket == bucket)
-    writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
-      kept ++ withStats(root, newFiles), "overwrite", Some(curId))
+    writeSnapshot(root, newSnapshotId, cur.nBuckets, cur.schema,
+      cur.manifest.filterNot(_.bucket == bucket) ++ newFiles, "overwrite", Some(cur.id))
   }
 
   /** Iceberg-style fast append: land NEW data files for the input rows
@@ -338,31 +407,13 @@ object TranscriptTable {
   def append(df: DataFrame, root: String, newSnapshotId: Long,
       filesPerBucket: Int = 4): Unit = {
     requireFreshSnapshot(root, newSnapshotId)
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root — append needs an existing table"))
-    val cur = snapshotMeta(root, curId)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
-    df.withColumn("bucket", bucketCol(nBuckets))
-      .repartition(nBuckets * filesPerBucket, col("bucket"),
-        pmod(xxhash64(col("conv_id"), lit(1)), lit(filesPerBucket)))
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", (4 * 1024 * 1024).toString) // see write()
-      .partitionBy("bucket")
-      .parquet(snapDataDir(root, newSnapshotId))
-    val newFiles = listDataFiles(root, newSnapshotId)
-    if (newFiles.isEmpty) {
-      // an empty append is a caller mistake, not a new snapshot; clean the
-      // orphan dir so the id stays usable (mirrors overwriteBucket)
-      val dir = Paths.get(snapDataDir(root, newSnapshotId))
-      if (Files.isDirectory(dir)) drained(Files.walk(dir)) {
-        _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
+    val cur = current(root)
+    val newFiles = land(salted(df, cur.nBuckets, filesPerBucket), root, newSnapshotId)
+    // an empty append is a caller mistake, not a new snapshot
+    if (newFiles.isEmpty)
       sys.error(s"append: no input rows — refusing to commit empty snapshot $newSnapshotId")
-    }
-    writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
-      readManifest(root, curId) ++ withStats(root, newFiles),
-      "append", Some(curId))
+    writeSnapshot(root, newSnapshotId, cur.nBuckets, cur.schema,
+      cur.manifest ++ newFiles, "append", Some(cur.id))
   }
 
   /** Iceberg-style incremental append scan: the rows ADDED after
@@ -420,11 +471,8 @@ object TranscriptTable {
       .reduce(_.unionByName(_))
 
   /** Read the table at its CURRENT snapshot. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val id = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    readAt(spark, root, id)
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    readAt(spark, root, currentId(root))
 
   /** Bin-pack compaction (the Iceberg `rewrite_data_files` maintenance
     * action): rewrite the CURRENT snapshot's data into `filesPerBucket`
@@ -437,15 +485,12 @@ object TranscriptTable {
     */
   def compact(spark: SparkSession, root: String, newSnapshotId: Long,
       filesPerBucket: Int = 1, layout: String = "salted"): Unit = {
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    val cur = snapshotMeta(root, curId)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
+    val cur = current(root)
     // write() recomputes the same bucket transform, lands the files under
     // the new snapshot's own dir and commits the manifest + stats; the
     // lazy read plan pulls from the old snapshot's files, so there is no
     // self-overwrite hazard
-    write(readAt(spark, root, curId).drop("bucket"), root, nBuckets,
+    write(readAt(spark, root, cur.id).drop("bucket"), root, cur.nBuckets,
       newSnapshotId, filesPerBucket, layout, operation = "replace")
   }
 
@@ -466,13 +511,9 @@ object TranscriptTable {
       newSnapshotId: Long): Long = {
     require(convIds.nonEmpty, "deleteConvIds: empty conv id list")
     requireFreshSnapshot(root, newSnapshotId)
-    val curId = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    val cur = snapshotMeta(root, curId)
-    val nBuckets = cur("partition_spec")("n_buckets").asInt
-    val (candidates, total) = selectFilesForIds(root, curId, convIds)
+    val cur = current(root)
+    val (candidates, total) = selectFilesForIds(root, cur.id, convIds)
     val candPaths = candidates.map(_.path).toSet
-    val kept = readManifest(root, curId).filterNot(f => candPaths(f.path))
     // ONE read of the candidate files: the deleted-row count rides the
     // rewrite itself via observe() (the same counters-on-the-write shape
     // extractWithCheckpoints uses), instead of a separate count pass —
@@ -480,44 +521,33 @@ object TranscriptTable {
     // checked AFTER the job but BEFORE the manifest commit: the rewrite's
     // data dir is rolled back on refusal, so a typo'd id still never
     // commits a snapshot.
-    val deleted = if (candidates.isEmpty) 0L else {
-      val isVictim = col("conv_id").isin(convIds: _*)
-      val obs = org.apache.spark.sql.Observation(s"graft_del_$newSnapshotId")
+    val isVictim = col("conv_id").isin(convIds: _*)
+    val obs = Observation(s"graft_del_$newSnapshotId")
+    val newFiles = if (candidates.isEmpty) Vector.empty[DataFile] else land(
       readFiles(spark, root, candidates)
         .observe(obs, coalesce(sum(when(isVictim, 1L).otherwise(0L)), lit(0L))
           .as("deleted"))
         .filter(!isVictim)
-        .repartition(math.max(1, candidates.map(_.bucket).distinct.size), col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size", (4 * 1024 * 1024).toString) // see write()
-        .partitionBy("bucket")
-        .parquet(snapDataDir(root, newSnapshotId))
-      // when every candidate row is a victim the filtered write lands no
-      // parquet files and AQE's empty-relation propagation can prune the
-      // CollectMetrics node (the overwriteBucket lesson) — in that case
-      // the candidate row count IS the deleted count, recovered from the
-      // manifest stats (exact: footer row counts), never guessed
-      obs.get.get("deleted").map(_.asInstanceOf[Long]).getOrElse {
-        if (candidates.forall(_.rows >= 0L)) candidates.map(_.rows).sum
+        .repartition(math.max(1, candidates.map(_.bucket).distinct.size), col("bucket")),
+      root, newSnapshotId)
+    // when every candidate row is a victim the filtered write lands no
+    // parquet files and AQE's empty-relation propagation can prune the
+    // CollectMetrics node (the overwriteBucket lesson) — only in that case
+    // is the candidate row count the deleted count, recovered from the
+    // manifest stats (exact: footer row counts); metrics missing for any
+    // other reason are recounted, never guessed
+    val deleted = if (candidates.isEmpty) 0L
+      else obs.get.get("deleted").map(_.asInstanceOf[Long]).getOrElse {
+        if (newFiles.isEmpty && candidates.forall(_.rows >= 0L)) candidates.map(_.rows).sum
         else readFiles(spark, root, candidates).filter(isVictim).count()
       }
-    }
-    if (deleted == 0L) {
-      // nothing committed yet (no snapshot json, current.json untouched);
-      // remove the orphan rewrite dir so the id stays usable
-      val dir = Paths.get(snapDataDir(root, newSnapshotId))
-      if (Files.isDirectory(dir)) drained(Files.walk(dir)) {
-        _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-    }
+    if (deleted == 0L) dropDataDir(root, newSnapshotId)
     require(deleted > 0L,
       s"deleteConvIds: no row matches any of the ${convIds.size} conv ids " +
         s"(checked ${candidates.size}/$total candidate files) — refusing to " +
         "commit a no-op snapshot")
-    val newFiles = listDataFiles(root, newSnapshotId)
-    writeSnapshot(root, newSnapshotId, nBuckets, cur("schema").asString,
-      kept ++ withStats(root, newFiles), "delete", Some(curId))
+    writeSnapshot(root, newSnapshotId, cur.nBuckets, cur.schema,
+      cur.manifest.filterNot(f => candPaths(f.path)) ++ newFiles, "delete", Some(cur.id))
     deleted
   }
 
@@ -552,10 +582,9 @@ object TranscriptTable {
     */
   def selectFilesForIds(root: String, snapshotId: Long,
       convIds: Seq[String]): (Vector[DataFile], Int) = {
-    val meta = snapshotMeta(root, snapshotId)
-    val nBuckets = meta("partition_spec")("n_buckets").asInt
-    val wanted = convIds.map(id => bucketOf(id, nBuckets)).toSet
-    val files = readManifest(root, snapshotId)
+    val snap = snapshot(root, snapshotId)
+    val wanted = convIds.map(id => bucketOf(id, snap.nBuckets)).toSet
+    val files = snap.manifest
     val selected = files.filter { f =>
       wanted.contains(f.bucket) && ((f.minConvId, f.maxConvId) match {
         case (Some(mn), Some(mx)) =>
@@ -571,7 +600,7 @@ object TranscriptTable {
     */
   private def emptyLike(spark: SparkSession, root: String, snapshotId: Long): DataFrame = {
     val schema = org.apache.spark.sql.types.DataType
-      .fromJson(snapshotMeta(root, snapshotId)("schema").asString)
+      .fromJson(snapshot(root, snapshotId).schema)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       .add("bucket", org.apache.spark.sql.types.IntegerType)
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -583,8 +612,7 @@ object TranscriptTable {
     */
   def readConvIdRange(spark: SparkSession, root: String,
       lo: String, hi: String): DataFrame = {
-    val id = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
+    val id = currentId(root)
     val (selected, _) = selectFilesForRange(root, id, lo, hi)
     if (selected.isEmpty) emptyLike(spark, root, id)
     else readFiles(spark, root, selected).filter(col("conv_id").between(lo, hi))
@@ -594,11 +622,8 @@ object TranscriptTable {
     * membership filter.
     */
   def readConvIds(spark: SparkSession, root: String,
-      convIds: Seq[String]): DataFrame = {
-    val id = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
-    readConvIdsAt(spark, root, id, convIds)
-  }
+      convIds: Seq[String]): DataFrame =
+    readConvIdsAt(spark, root, currentId(root), convIds)
 
   /** [[readConvIds]] against an explicit snapshot — the time-travel point
     * lookup. Same exactness contract: pruning only skips files whose stats
@@ -614,71 +639,43 @@ object TranscriptTable {
 
   /** Drop all snapshots except `keep` (must include the current one):
     * deletes their metadata files and any data file no kept manifest
-    * references — after this, [[readAt]] on an expired id fails.
+    * references — after this, [[readAt]] on an expired id fails. A
+    * snapshot dir no kept manifest references at all goes as a whole
+    * tree, so expired snapshots leave no empty bucket=N dirs or _SUCCESS
+    * litter; the checksummed local FS deletes each file's .crc sibling.
     */
   def expireSnapshots(root: String, keep: Set[Long]): Unit = {
-    val cur = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root"))
+    val cur = currentId(root)
     require(keep.contains(cur), s"keep set must include current snapshot $cur")
-    val meta = Paths.get(root, "metadata")
-    val all = snapshotIds(root)
     val referenced = keep.flatMap(id => readManifest(root, id).map(_.path))
-    all.filterNot(keep).foreach { id =>
-      listDataFiles(root, id).foreach { f =>
-        if (!referenced.contains(f.path)) {
-          val p = Paths.get(root, f.path)
-          Files.deleteIfExists(p)
-          // the local FS committer writes a checksum sibling per file;
-          // delete it too or expired buckets keep .crc litter
-          Files.deleteIfExists(p.resolveSibling("." + p.getFileName.toString + ".crc"))
-        }
-      }
-      Files.deleteIfExists(meta.resolve(s"snapshot-$id.json"))
-      // if no kept manifest references anything under this snapshot's
-      // dir, remove the whole tree — otherwise expired snapshots leave
-      // empty bucket=N dirs and _SUCCESS/.crc litter forever
-      val snapRel = s"data/snap-$id"
-      if (!referenced.exists(_.startsWith(snapRel + "/"))) {
-        val dir = Paths.get(root, snapRel)
-        if (Files.isDirectory(dir)) {
-          drained(Files.walk(dir)) {
-            _.toVector.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-          }
-        }
-      }
+    val fs = this.fs(new Path(root))
+    snapshotIds(root).filterNot(keep).foreach { id =>
+      if (referenced.exists(_.startsWith(s"data/snap-$id/")))
+        listDataFiles(root, id).filterNot(f => referenced(f.path))
+          .foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
+      else dropDataDir(root, id)
+      fs.delete(metaPath(root, s"snapshot-$id.json"), false)
     }
   }
 
   def snapshotMeta(root: String, snapshotId: Long): Json.Value = {
-    val p = Paths.get(root, "metadata", s"snapshot-$snapshotId.json")
-    require(Files.exists(p), s"snapshot $snapshotId not found at $root")
-    Json.parse(Files.readString(p))
+    val p = metaPath(root, s"snapshot-$snapshotId.json")
+    require(fs(p).exists(p), s"snapshot $snapshotId not found at $root")
+    readJson(p)
   }
 
   def readManifest(root: String, snapshotId: Long): Vector[DataFile] =
-    snapshotMeta(root, snapshotId)("manifest").asArray.map { v =>
-      DataFile(v("bucket").asInt, v("path").asString,
-        v.get("min_conv_id").map(_.asString), v.get("max_conv_id").map(_.asString),
-        v.get("rows").map(_.asLong).getOrElse(-1L))
-    }
+    snapshot(root, snapshotId).manifest
 
   def currentSnapshotId(root: String): Option[Long] = {
-    val p = Paths.get(root, "metadata", "current.json")
-    if (!Files.exists(p)) None
-    else Json.parse(Files.readString(p)).get("current_snapshot_id").map(_.asLong)
+    val p = metaPath(root, "current.json")
+    if (!fs(p).exists(p)) None
+    else readJson(p).get("current_snapshot_id").map(_.asLong)
   }
 
   /** All live (unexpired) snapshot ids, ascending. */
-  def snapshotIds(root: String): Vector[Long] = {
-    val meta = Paths.get(root, "metadata")
-    if (!Files.isDirectory(meta)) Vector.empty
-    else drained(Files.list(meta)) {
-      _.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("snapshot-") && s.endsWith(".json") =>
-          s.stripPrefix("snapshot-").stripSuffix(".json").toLong }
-        .toVector
-    }.sorted
-  }
+  def snapshotIds(root: String): Vector[Long] =
+    numbered(new Path(s"$root/metadata"), "snapshot-").map(_._1).sorted
 
   // ---- metadata tables (Iceberg's `snapshots` / `files` / `history`) -----
   //
@@ -696,13 +693,12 @@ object TranscriptTable {
   def snapshotsTable(spark: SparkSession, root: String): DataFrame = {
     val cur = currentSnapshotId(root)
     val rows = snapshotIds(root).map { id =>
-      val m = snapshotMeta(root, id)
-      val manifest = readManifest(root, id)
+      val snap = snapshot(root, id)
+      val manifest = snap.manifest
       val nRows = if (manifest.forall(_.rows >= 0L)) manifest.map(_.rows).sum else -1L
-      (id, m.get("parent_snapshot_id").map(_.asLong),
-        m.get("operation").map(_.asString).getOrElse("unknown"),
-        m("partition_spec")("n_buckets").asInt,
-        manifest.size.toLong, nRows, cur.contains(id))
+      (id, snap.meta.get("parent_snapshot_id").map(_.asLong),
+        snap.meta.get("operation").map(_.asString).getOrElse("unknown"),
+        snap.nBuckets, manifest.size.toLong, nRows, cur.contains(id))
     }
     import spark.implicits._
     rows.toDF("snapshot_id", "parent_snapshot_id", "operation", "n_buckets",
@@ -714,8 +710,7 @@ object TranscriptTable {
     */
   def filesTable(spark: SparkSession, root: String,
       snapshotId: Option[Long] = None): DataFrame = {
-    val id = snapshotId.orElse(currentSnapshotId(root)).getOrElse(
-      sys.error(s"no current snapshot at $root (missing metadata/current.json)"))
+    val id = snapshotId.getOrElse(currentId(root))
     val rows = readManifest(root, id).map { f =>
       (id, f.bucket, f.path, if (f.rows >= 0L) Some(f.rows) else None,
         f.minConvId, f.maxConvId)
@@ -730,13 +725,12 @@ object TranscriptTable {
     * stops at an expired parent (its metadata is gone) and refuses cycles.
     */
   def historyTable(spark: SparkSession, root: String): DataFrame = {
-    val cur = currentSnapshotId(root).getOrElse(
-      sys.error(s"no current snapshot at $root (missing metadata/current.json)"))
+    val cur = currentId(root)
+    val fs = this.fs(new Path(root))
     val buf = Vector.newBuilder[(Long, Option[Long], String, Boolean)]
     val seen = scala.collection.mutable.Set.empty[Long]
     var id: Option[Long] = Some(cur)
-    while (id.exists(i =>
-        Files.exists(Paths.get(root, "metadata", s"snapshot-$i.json")))) {
+    while (id.exists(i => fs.exists(metaPath(root, s"snapshot-$i.json")))) {
       val i = id.get
       require(seen.add(i), s"snapshot lineage cycle at $i in $root")
       val m = snapshotMeta(root, i)
@@ -749,48 +743,46 @@ object TranscriptTable {
     buf.result().toDF("snapshot_id", "parent_snapshot_id", "operation", "is_current")
   }
 
-  private def atomicWrite(path: Path, content: String): Unit = {
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The one metadata commit: write a uniquely named tmp sibling, then
+    * rename it over `p`. Concurrent writers never share a tmp file. On the
+    * local FS the rename is an atomic replace, so readers see the old file
+    * or the new one. A store whose rename refuses to replace fails the
+    * commit, naming `p`.
+    */
+  private def atomicWrite(p: Path, content: String): Unit = {
+    val fs = metaFs(p)
+    val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, p)) {
+      fs.delete(tmp, false)
+      sys.error(s"commit of $p failed: the filesystem refused to rename $tmp over it")
+    }
   }
 
   // ---- per-partition checkpoint manifests --------------------------------
 
-  def checkpointDir(outRoot: String): Path =
-    Paths.get(outRoot, "metadata", "checkpoints")
+  /** the checkpoint dir as a local path (a `file:` root resolves to its dir) */
+  def checkpointDir(outRoot: String): java.nio.file.Path =
+    new java.io.File(new Path(outRoot).toUri.getPath, "metadata/checkpoints").toPath
 
-  def committedBuckets(outRoot: String): Set[Int] = {
-    val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) Set.empty
-    else drained(Files.list(dir)) {
-      _.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("bucket-") && s.endsWith(".json") =>
-          s.stripPrefix("bucket-").stripSuffix(".json").toInt }
-        .toSet
-    }
-  }
+  /** every committed checkpoint manifest, by bucket: one read of
+    * `bucket-*.json`
+    */
+  private def checkpoints(outRoot: String): Map[Int, Json.Value] =
+    numbered(metaPath(outRoot, "checkpoints"), "bucket-")
+      .map { case (b, p) => b.toInt -> readJson(p) }.toMap
+
+  def committedBuckets(outRoot: String): Set[Int] = checkpoints(outRoot).keySet
 
   /** bucket → snapshot id recorded in its committed checkpoint manifest
     * (the lineage field resume must validate against the current snapshot)
     */
-  def committedBucketSnapshots(outRoot: String): Map[Int, Long] = {
-    val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) Map.empty
-    else drained(Files.list(dir)) {
-      _.map(p => p.getFileName.toString -> p)
-        .collect { case (s, p) if s.startsWith("bucket-") && s.endsWith(".json") =>
-          s.stripPrefix("bucket-").stripSuffix(".json").toInt ->
-            Json.parse(Files.readString(p))("snapshot_id").asLong }
-        .toVector.toMap
-    }
-  }
+  def committedBucketSnapshots(outRoot: String): Map[Int, Long] =
+    checkpoints(outRoot).map { case (b, m) => b -> m("snapshot_id").asLong }
 
   def commitBucket(outRoot: String, bucket: Int, snapshotId: Long,
       nBuckets: Int, c: Counters): Unit = {
-    val dir = checkpointDir(outRoot)
-    Files.createDirectories(dir)
     val manifest = Obj.of(
       "bucket" -> Num(bucket.toDouble),
       "snapshot_id" -> Num(snapshotId.toDouble),
@@ -800,24 +792,16 @@ object TranscriptTable {
         "bytes_tokenized" -> Num(c.bytes.toDouble),
         "extraction_mismatches" -> Num(c.mismatches.toDouble)),
       "complete" -> Bool(true))
-    atomicWrite(dir.resolve(s"bucket-$bucket.json"), Json.write(manifest))
+    atomicWrite(metaPath(outRoot, s"checkpoints/bucket-$bucket.json"), Json.write(manifest))
   }
 
-  def readCounters(outRoot: String): Counters = {
-    val dir = checkpointDir(outRoot)
-    if (!Files.isDirectory(dir)) return Counters(0, 0, 0)
-    drained(Files.list(dir)) {
-      _.filter(_.toString.endsWith(".json"))
-        .map(p => Json.parse(Files.readString(p)))
-        .foldLeft(Counters(0, 0, 0)) { (acc, m) =>
-        val c = m("counters")
-        Counters(
-          acc.turns + c("turns_parsed").asLong,
-          acc.bytes + c("bytes_tokenized").asLong,
-          acc.mismatches + c("extraction_mismatches").asLong)
-        }
+  def readCounters(outRoot: String): Counters =
+    checkpoints(outRoot).values.map(_("counters")).foldLeft(Counters(0, 0, 0)) { (acc, c) =>
+      Counters(
+        acc.turns + c("turns_parsed").asLong,
+        acc.bytes + c("bytes_tokenized").asLong,
+        acc.mismatches + c("extraction_mismatches").asLong)
     }
-  }
 
   /** Checkpointed extraction run: reads the bucketed transcripts table,
     * extracts per bucket, writes extracted lines per bucket, and commits a
@@ -830,79 +814,54 @@ object TranscriptTable {
     * ~0.2 s (graft.ScalingCheckpoints at 128 buckets) — noise against
     * real bucket sizes, but dominant on small corpora, so `maxConcurrent`
     * overlaps bucket jobs from a bounded driver pool (Spark schedules
-    * concurrent jobs fine; manifests are distinct files with atomic
-    * moves, so resume granularity is unchanged).
+    * concurrent jobs fine; manifests are distinct files, each committed
+    * by its own rename, so resume granularity is unchanged).
     */
   def extractWithCheckpoints(spark: SparkSession, tableRoot: String,
       outRoot: String, nBuckets: Int, maxConcurrent: Int = 1,
       reextractStale: Boolean = false): Counters = {
-    val snapshotId = currentSnapshotId(tableRoot).getOrElse(
-      sys.error(s"no current snapshot at $tableRoot (missing metadata/current.json)"))
+    val snap = current(tableRoot)
     // buckets resolve through the current snapshot's manifest; a bucket's
     // files may span SNAPSHOT DIRS (append lands new files beside the
     // old ones), so reads go through the per-dir grouping in readFiles
-    val byBucket = readManifest(tableRoot, snapshotId).groupBy(_.bucket)
+    val byBucket = snap.manifest.groupBy(_.bucket)
     // resume validates LINEAGE, not just bucket presence: a checkpoint
     // committed against an older snapshot (the table advanced via
     // overwriteBucket between run and resume) must not silently mix old
     // output with new — fail, or re-extract those buckets when asked to
     val committed = committedBucketSnapshots(outRoot)
-    val stale = committed.collect { case (b, s) if s != snapshotId => b }.toVector.sorted
+    val stale = committed.collect { case (b, s) if s != snap.id => b }.toVector.sorted
     if (stale.nonEmpty && !reextractStale)
       sys.error(s"checkpoints for buckets ${stale.mkString(",")} at $outRoot " +
         s"were committed against snapshot(s) ${stale.map(committed).distinct.mkString(",")} " +
-        s"but the table is now at snapshot $snapshotId — resuming would mix " +
+        s"but the table is now at snapshot ${snap.id} — resuming would mix " +
         "snapshots; pass reextractStale = true to re-extract those buckets")
     val done = committed.keySet -- stale
-    val todo = (0 until nBuckets).filterNot(done)
-    val processBucket = (b: Int) => {
+    inPool(maxConcurrent, (0 until nBuckets).filterNot(done)) { b =>
       val bucketFiles = byBucket.getOrElse(b, Vector.empty)
       if (bucketFiles.isEmpty) {
         // partitionBy writes no files for an empty bucket — commit an
         // empty manifest so resume can progress past it
-        commitBucket(outRoot, b, snapshotId, nBuckets, Counters(0, 0, 0))
+        commitBucket(outRoot, b, snap.id, nBuckets, Counters(0, 0, 0))
       } else {
-      val in = readFiles(spark, tableRoot, bucketFiles)
-      // counters ride the write itself via observe() (SURVEY §2.5): the
-      // metrics are collected from the rows as they flow into the parquet
-      // sink, so the manifest commits in ONE output pass — the round-2
-      // read-back-and-recount doubled output I/O per bucket, which at
-      // 100x scale is real money. A task that fails after writing still
-      // doesn't commit: the manifest only lands after the job succeeds.
-      val obs = org.apache.spark.sql.Observation(s"graft_ckpt_b$b")
-      Pipeline.extracted(in)
-        .withColumn("n_lines", size(col("ex.lines")))
-        .withColumn("bytes", col("ex.bytes"))
-        .observe(obs, count(lit(1)).as("turns"),
-          coalesce(sum(col("bytes")), lit(0L)).as("bytes"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outRoot/data/bucket=$b")
-      val m = obs.get
-      commitBucket(outRoot, b, snapshotId, nBuckets,
-        Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long], 0))
+        // counters ride the write itself via observe() (SURVEY §2.5): the
+        // metrics are collected from the rows as they flow into the parquet
+        // sink, so the manifest commits in ONE output pass — the round-2
+        // read-back-and-recount doubled output I/O per bucket, which at
+        // 100x scale is real money. A task that fails after writing still
+        // doesn't commit: the manifest only lands after the job succeeds.
+        val obs = Observation(s"graft_ckpt_b$b")
+        Pipeline.extracted(readFiles(spark, tableRoot, bucketFiles))
+          .withColumn("n_lines", size(col("ex.lines")))
+          .withColumn("bytes", col("ex.bytes"))
+          .observe(obs, count(lit(1)).as("turns"),
+            coalesce(sum(col("bytes")), lit(0L)).as("bytes"))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outRoot/data/bucket=$b")
+        val m = obs.get
+        commitBucket(outRoot, b, snap.id, nBuckets,
+          Counters(m("turns").asInstanceOf[Long], m("bytes").asInstanceOf[Long], 0))
       }
-    }: Unit
-    if (maxConcurrent <= 1) todo.foreach(processBucket)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrent)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        // Drain ALL in-flight buckets before propagating a failure: a
-        // fail-fast Await would return while straggler jobs are still
-        // writing their bucket=<b> dirs, and a caller retrying
-        // extractWithCheckpoints (the documented resume flow) could then
-        // race a fresh Overwrite against a straggler's commit. Each future
-        // is folded to Either so sequence never short-circuits; the first
-        // failure is rethrown only after every bucket job has finished.
-        val settled = Await.result(
-          Future.sequence(todo.map(b =>
-            Future(processBucket(b)).map(Right(_): Either[Throwable, Unit])
-              .recover { case t => Left(t) })),
-          Duration.Inf)
-        settled.collectFirst { case Left(t) => t }.foreach(t => throw t)
-      } finally pool.shutdown()
     }
     readCounters(outRoot)
   }

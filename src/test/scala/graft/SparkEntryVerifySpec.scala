@@ -40,4 +40,16 @@ class SparkEntryVerifySpec extends AnyFunSuite {
       features.foreach(f => assert(row.getAs[Long](f) > 0, s"$f in $row"))
     }
   }
+
+  test("Bench.timeQuery: a query that throws is timed and reported by its exception class") {
+    val (secs, status) = Bench.timeQuery(spark, "sf0.001",
+      (_, _) => throw new IllegalStateException("boom"))
+    assert(status == "error:java.lang.IllegalStateException")
+    assert(secs >= 0.0)
+    // a failure while the count runs, not while the plan is built
+    val (_, atRun) = Bench.timeQuery(spark, "sf0.001",
+      (s, _) => s.range(3).toDF().filter("raise_error('boom') is null"))
+    assert(atRun.startsWith("error:"), atRun)
+    assert(Bench.timeQuery(spark, "sf0.001", (s, _) => s.range(3).toDF())._2 == "ok")
+  }
 }

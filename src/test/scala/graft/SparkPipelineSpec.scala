@@ -152,10 +152,15 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(graft.pdfxml.PdfXml.parse(onePage).objects.isEmpty)
   }
 
-  test("iceberg-style table: snapshot time travel, overwrite, expire") {
+  /** The time-travel / overwrite / expire walk over a table whose root is
+    * `rootOf(dir)` for a fresh local `dir`: a plain path or its `file:`
+    * URI. On-disk assertions look at `dir` itself.
+    */
+  private def timeTravelOverwriteExpire(rootOf: java.nio.file.Path => String): Unit = {
     val sp = spark
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_tt").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_tt")
+    val root = rootOf(dir)
     val nBuckets = 4
     val t = Transcripts.synthesize(sp, 30, seed = 13L).toDF()
     TranscriptTable.write(t, root, nBuckets, snapshotId = 1L)
@@ -176,7 +181,7 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(TranscriptTable.read(sp, root).count() == total1 + b1n)
     assert(TranscriptTable.read(sp, root).filter(col("bucket") === 1).count() == 2 * b1n)
     // checkpointed extraction resolves through the current manifest
-    val out = java.nio.file.Files.createTempDirectory("graft_tt_out").toString
+    val out = rootOf(java.nio.file.Files.createTempDirectory("graft_tt_out"))
     val c = TranscriptTable.extractWithCheckpoints(sp, root, out, nBuckets)
     val expectTurns = TranscriptTable.read(sp, root)
       .filter(col("tool").isin("pdftohtml", "shakespeare")).count()
@@ -196,7 +201,7 @@ class SparkPipelineSpec extends AnyFunSuite {
     // files under snap-1 for the untouched buckets, so those SURVIVE and
     // the snap-1 dir itself must remain; only its replaced bucket-1
     // files were deleted)
-    val snap1 = java.nio.file.Paths.get(root, "data", "snap-1")
+    val snap1 = dir.resolve("data/snap-1")
     assert(java.nio.file.Files.isDirectory(snap1),
       "snap-1 dir must survive while snapshot 2 references its files")
     assert(!java.nio.file.Files.isDirectory(snap1.resolve("bucket=1")) ||
@@ -223,10 +228,43 @@ class SparkPipelineSpec extends AnyFunSuite {
     // OWN dir (only bucket-1 files) is no longer referenced by snap 3
     TranscriptTable.overwriteBucket(newB1, root, 1, 3L) // back to 1x bucket 1
     TranscriptTable.expireSnapshots(root, keep = Set(3L))
-    assert(!java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(root, "data", "snap-2")),
+    assert(!java.nio.file.Files.isDirectory(dir.resolve("data/snap-2")),
       "expired snapshot 2's unreferenced dir tree must be removed")
     assert(TranscriptTable.read(sp, root).count() == total1)
+  }
+
+  test("iceberg-style table: snapshot time travel, overwrite, expire") {
+    timeTravelOverwriteExpire(_.toString)
+  }
+
+  test("iceberg-style table: snapshot time travel, overwrite, expire (file: URI root)") {
+    timeTravelOverwriteExpire(_.toUri.toString)
+  }
+
+  test("metadata commits leave another writer's in-flight tmp file alone") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val sp = spark
+    val dir = Files.createTempDirectory("graft_tmp")
+    val root = dir.toString
+    // directories where a concurrent writer's fixed-name tmp files would
+    // sit mid-commit; a commit must neither fail on nor consume them
+    val planted = Seq("metadata/current.json.tmp", "metadata/checkpoints/bucket-0.json.tmp")
+      .map(p => Files.createDirectories(dir.resolve(p)))
+    planted.foreach(p => Files.writeString(p.resolve("inflight"), "x"))
+    val t = Transcripts.synthesize(sp, 12, seed = 5L).toDF()
+    TranscriptTable.write(t, root, nBuckets = 4, snapshotId = 1L)
+    TranscriptTable.append(t, root, newSnapshotId = 2L)
+    TranscriptTable.commitBucket(root, 0, 2L, 4, TranscriptTable.Counters(1, 2, 0))
+    assert(TranscriptTable.currentSnapshotId(root).contains(2L))
+    assert(TranscriptTable.read(sp, root).count() == 2 * t.count())
+    assert(TranscriptTable.readCounters(root) == TranscriptTable.Counters(1, 2, 0))
+    planted.foreach(p => assert(Files.readString(p.resolve("inflight")) == "x"))
+    // every commit renamed its own tmp file away
+    val names = Files.list(dir.resolve("metadata")).iterator.asScala
+      .map(_.getFileName.toString).toSet
+    assert(names == Set("current.json", "current.json.tmp", "snapshot-1.json",
+      "snapshot-2.json", "checkpoints"), names)
   }
 
   test("iceberg-style table: fast append + incremental append scan") {
