@@ -94,6 +94,34 @@ object SparkEntry {
     } finally pool.shutdown()
   }
 
+  /** q36's drift digest: (count, bit_xor, sum of the low 32 bits) of
+    * xxhash64 over `cols`. The verifyByHash trade: one map-side-combinable
+    * aggregate, no exchange of data rows. Comparing two digests detects
+    * any multiset difference up to a ~2^-32 collision: a repeated row
+    * cancels itself out of the xor but not out of the sum, whose 32-bit
+    * terms cannot overflow a Long below 2^31 rows (sum(h) would, under
+    * ANSI mode, Spark 4's default).
+    */
+  private[graft] def rowDigest(df: DataFrame, cols: Seq[String]): org.apache.spark.sql.Row =
+    df.select(xxhash64(cols.map(col): _*).as("lh"))
+      .agg(count(lit(1)), expr("bit_xor(lh)"), sum(col("lh").bitwiseAND(lit(0xffffffffL))))
+      .head()
+
+  /** q44's files ↔ snapshots check: per snapshot (id, n_rows, n_files) of
+    * the snapshots table against the files table's (rows, files) totals by
+    * snapshot id. A snapshot with no files has no group there and reads
+    * as (0, 0).
+    */
+  private[graft] def requireFilesMatchSnapshots(snapshots: Seq[(Long, Long, Long)],
+      fileAggs: Map[Long, (Long, Long)]): Unit =
+    snapshots.foreach { case (id, nRows, nFiles) =>
+      val (aggRows, aggFiles) = fileAggs.getOrElse(id, (0L, 0L))
+      require(aggRows == nRows,
+        s"files table rows for snapshot $id disagree with snapshots table")
+      require(aggFiles == nFiles,
+        s"files table count for snapshot $id disagrees with snapshots table")
+    }
+
   /** (rows, distinct conv_ids) of a table read */
   private def rowsAndConvs(df: DataFrame): (Long, Long) = {
     val r = df.agg(count(lit(1)), countDistinct(col("conv_id"))).head()
@@ -807,21 +835,11 @@ object SparkEntry {
       // (guide §2.6)
       // non-overwritten buckets must be byte-identical across snapshots.
       // Round 6 checked this with exceptAll — a full shuffle of BOTH
-      // snapshots just to prove emptiness. The digest below is the
-      // verifyByHash trade (map-side-combinable aggregate, no exchange of
-      // data rows): rows are unique by (conv_id, turn_idx), so comparing
-      // (count, bit_xor(h)) over xxhash64 of every compared column
-      // detects any multiset difference up to a ~2^-64 collision — the
-      // same contract the engine's scale-path verification uses (sum(h)
-      // would strengthen it but overflows under ANSI mode, Spark 4's
-      // default). At table scale this turns a 2x-table shuffle into two
-      // scans.
+      // snapshots just to prove emptiness; [[rowDigest]] compares a
+      // per-snapshot digest instead
       val cols = Seq("conv_id", "turn_idx", "role", "text", "tool")
-      def bucketDigest(df: org.apache.spark.sql.DataFrame) = df
-        .filter(col("bucket") =!= 0)
-        .select(xxhash64(cols.map(col): _*).as("lh"))
-        .agg(count(lit(1)), expr("bit_xor(lh)"))
-        .head()
+      def bucketDigest(df: org.apache.spark.sql.DataFrame) =
+        rowDigest(df.filter(col("bucket") =!= 0), cols)
       val Seq(r1, r2, d1, d2) = overlap(
         () => stats(graft.spark.TranscriptTable.readAt(s, root, 1L)),
         () => stats(graft.spark.TranscriptTable.read(s, root)),
@@ -1050,14 +1068,9 @@ object SparkEntry {
       require(snapRows.map(_.getLong(0)).toVector == Vector(1L, 2L, 3L, 4L),
         "snapshots table must list every live snapshot")
       // files ↔ snapshots consistency, per snapshot
-      snapRows.foreach { r =>
-        val id = r.getLong(0)
-        val (aggRows, aggFiles) = fileAggs(id)
-        require(aggRows == r.getLong(r.fieldIndex("n_rows")),
-          s"files table rows for snapshot $id disagree with snapshots table")
-        require(aggFiles == r.getLong(r.fieldIndex("n_files")),
-          s"files table count for snapshot $id disagrees with snapshots table")
-      }
+      requireFilesMatchSnapshots(snapRows.toSeq.map(r =>
+        (r.getLong(0), r.getLong(r.fieldIndex("n_rows")), r.getLong(r.fieldIndex("n_files")))),
+        fileAggs)
       // compaction rewrote the same rows into fewer files
       val byId = snapRows.map(r => r.getLong(0) -> r).toMap
       require(byId(4L).getLong(byId(4L).fieldIndex("n_files")) <

@@ -103,12 +103,15 @@ object PdfLex {
   /** stream: dict + raw (still encoded) data range in the file bytes */
   final case class PStream(dict: PDict, dataStart: Int, dataLen: Int) extends PVal
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\n' || b == '\r' || b == '\t' || b == '\f' || b == 0
-  private def isDelim(b: Byte): Boolean =
-    b == '(' || b == ')' || b == '<' || b == '>' || b == '[' || b == ']' ||
-      b == '{' || b == '}' || b == '/' || b == '%'
-  private def isRegular(b: Byte): Boolean = !isWs(b) && !isDelim(b)
+  /** byte classes (§7.2.2): 1 white-space, 2 delimiter, 0 regular */
+  private val ByteClass: Array[Byte] = {
+    val t = new Array[Byte](256)
+    " \n\r\t\f\u0000".foreach(ch => t(ch) = 1)
+    "()<>[]{}/%".foreach(ch => t(ch) = 2)
+    t
+  }
+  private def isWs(b: Byte): Boolean = ByteClass(b & 0xff) == 1
+  private def isRegular(b: Byte): Boolean = ByteClass(b & 0xff) == 0
 
   /** mutable cursor over the file bytes */
   private final class Cur(val b: Array[Byte], var p: Int) {
@@ -128,7 +131,44 @@ object PdfLex {
       while (p < b.length && isRegular(b(p))) p += 1
       new String(b, s, p - s, java.nio.charset.StandardCharsets.ISO_8859_1)
     }
+    /** the keyword at the cursor as an operator code (see `Op*`): its
+      * bytes packed first-lowest, 0 when there is none, -1 past four
+      * bytes — the interpreter reads every operator without a `String`
+      */
+    def opCode(): Int = {
+      val s = p
+      var code = 0
+      while (p < b.length && isRegular(b(p))) {
+        if (p - s < 4) code |= (b(p) & 0xff) << (8 * (p - s))
+        p += 1
+      }
+      if (p - s > 4) -1 else code
+    }
   }
+
+  // content-stream operators as Cur.opCode values ("Tf" = 'T' | 'f' << 8)
+  private final val Op_q = 'q'
+  private final val Op_Q = 'Q'
+  private final val Op_cm = 'c' | 'm' << 8
+  private final val Op_rg = 'r' | 'g' << 8
+  private final val Op_g = 'g'
+  private final val Op_BT = 'B' | 'T' << 8
+  private final val Op_ET = 'E' | 'T' << 8
+  private final val Op_Tf = 'T' | 'f' << 8
+  private final val Op_TL = 'T' | 'L' << 8
+  private final val Op_Tc = 'T' | 'c' << 8
+  private final val Op_Tw = 'T' | 'w' << 8
+  private final val Op_Tz = 'T' | 'z' << 8
+  private final val Op_Td = 'T' | 'd' << 8
+  private final val Op_TD = 'T' | 'D' << 8
+  private final val Op_Tm = 'T' | 'm' << 8
+  private final val Op_TStar = 'T' | '*' << 8
+  private final val Op_Tj = 'T' | 'j' << 8
+  private final val Op_TJ = 'T' | 'J' << 8
+  private final val Op_Quote = '\''
+  private final val Op_DQuote = '"'
+  private final val Op_Do = 'D' | 'o' << 8
+  private final val Op_BI = 'B' | 'I' << 8
 
   /** parse one COS value at the cursor (after skipWs) */
   private def parseVal(c: Cur): PVal = {
@@ -159,22 +199,41 @@ object PdfLex {
     }
   }
 
+  /** a name's bytes decode as Latin-1, one char per byte (like
+    * [[parseLiteralString]]). A name without `#xx` escapes is one `String`
+    * over its byte range; one with an escape is read again from its start
+    */
   private def parseName(c: Cur): String = {
     c.p += 1 // '/'
+    val s = c.p
+    while (!c.atEnd && isRegular(c.peek) && c.peek != '#') c.p += 1
+    if (c.atEnd || c.peek != '#')
+      return new String(c.b, s, c.p - s, java.nio.charset.StandardCharsets.ISO_8859_1)
+    c.p = s
     val sb = new StringBuilder
     while (!c.atEnd && isRegular(c.peek)) {
       val ch = c.peek
       if (ch == '#' && c.p + 2 < c.b.length) {
         val h = Character.digit(c.b(c.p + 1), 16); val l = Character.digit(c.b(c.p + 2), 16)
         if (h >= 0 && l >= 0) { sb.append(((h << 4) | l).toChar); c.p += 3 }
-        else { sb.append(ch.toChar); c.p += 1 }
-      } else { sb.append(ch.toChar); c.p += 1 }
+        else { sb.append('#'); c.p += 1 }
+      } else { sb.append((ch & 0xff).toChar); c.p += 1 }
     }
     sb.toString
   }
 
+  /** a string without escapes or nested parentheses is one Latin-1
+    * `String` over its bytes; any other is read again from its start
+    */
   private def parseLiteralString(c: Cur): String = {
     c.p += 1 // '('
+    val s = c.p
+    var e = s
+    while (e < c.b.length && c.b(e) != ')' && c.b(e) != '\\' && c.b(e) != '(') e += 1
+    if (e < c.b.length && c.b(e) == ')') {
+      c.p = e + 1
+      return new String(c.b, s, e - s, java.nio.charset.StandardCharsets.ISO_8859_1)
+    }
     val sb = new StringBuilder
     var depth = 1
     while (depth > 0) {
@@ -272,13 +331,48 @@ object PdfLex {
     n1
   }
 
+  /** 10^0 .. 10^22: each product is exact (5^22 < 2^53), so every entry is */
+  private val Pow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10)
+
+  /** `[+-]digits[.digits]` read straight from the bytes. With at most 15
+    * significant digits the mantissa m is an exact double (< 10^15 < 2^53),
+    * and with at most 22 fraction digits k so is 10^k; one IEEE division
+    * `m / 10^k` is then the correctly rounded value of the decimal — the
+    * same double `String.toDouble` returns, bit for bit (sign of `-0`
+    * included). Anything else (longer mantissas, malformed tokens such as
+    * `.`, `+`, `1.2.3`) takes `toDouble`, which throws where it threw before.
+    */
   private def parseNumber(c: Cur): PNum = {
+    val b = c.b
     val s = c.p
-    if (!c.atEnd && (c.peek == '+' || c.peek == '-')) c.p += 1
-    while (!c.atEnd && ((c.peek >= '0' && c.peek <= '9') || c.peek == '.')) c.p += 1
-    if (c.p == s) throw new PdfError(s"expected number at ${c.p} ('${c.peek.toChar}')")
-    PNum(new String(c.b, s, c.p - s, java.nio.charset.StandardCharsets.ISO_8859_1).toDouble)
+    var p = s
+    val neg = p < b.length && b(p) == '-'
+    if (p < b.length && (b(p) == '+' || b(p) == '-')) p += 1
+    var m = 0L
+    var sig = 0 // digits from the first non-zero one on
+    var frac = 0
+    var digits = 0
+    var dots = 0
+    while (p < b.length && ((b(p) >= '0' && b(p) <= '9') || b(p) == '.')) {
+      if (b(p) == '.') dots += 1
+      else {
+        digits += 1
+        if (dots > 0) frac += 1
+        if (sig > 0 || b(p) != '0') { sig += 1; if (sig <= 15) m = m * 10 + (b(p) - '0') }
+      }
+      p += 1
+    }
+    c.p = p
+    if (p == s) throw new PdfError(s"expected number at ${c.p} ('${c.peek.toChar}')")
+    if (digits > 0 && dots <= 1 && sig <= 15 && frac <= 22) {
+      val v = m / Pow10(frac)
+      PNum(if (neg) -v else v)
+    } else PNum(new String(b, s, p - s, java.nio.charset.StandardCharsets.ISO_8859_1).toDouble)
   }
+
+  /** [[parseNumber]] over one token's Latin-1 bytes */
+  private[graft] def number(token: String): Double =
+    parseNumber(new Cur(token.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), 0)).d
 
   final class PdfError(msg: String) extends RuntimeException(msg)
 
@@ -1356,15 +1450,34 @@ object PdfLex {
   private final class FontspecReg {
     val specs = ArrayBuffer.empty[Spec]
     private val idx = mutable.HashMap.empty[Spec, Int]
+    // the last combination: a show that repeats it allocates no Spec and
+    // skips the hash lookup
+    private var last: Spec = null
+    private var lastId = -1
     def id(size: Int, family: String, color: String): Int = {
-      val s = Spec(size, family, color)
-      idx.getOrElseUpdate(s, { specs += s; specs.length - 1 })
+      if (last == null || last.size != size || last.family != family || last.color != color) {
+        last = Spec(size, family, color)
+        lastId = idx.getOrElseUpdate(last, { specs += last; specs.length - 1 })
+      }
+      lastId
     }
   }
 
-  private def hexColor(r: Double, g: Double, b: Double): String = {
-    @inline def c(x: Double): Int = math.max(0, math.min(255, math.round(x * 255).toInt))
-    f"#${c(r)}%02x${c(g)}%02x${c(b)}%02x"
+  private val HexDigits: Array[Char] = "0123456789abcdef".toCharArray
+
+  /** `#rrggbb` of fill components in 0..1 (clamped; NaN reads 0) — the
+    * characters come from a table, not `java.util.Formatter`: this runs on
+    * every `rg`/`g` operator
+    */
+  private[graft] def hexColor(r: Double, g: Double, b: Double): String = {
+    val out = new Array[Char](7)
+    out(0) = '#'
+    def put(i: Int, x: Double): Unit = {
+      val v = math.max(0, math.min(255, math.round(x * 255).toInt))
+      out(i) = HexDigits(v >> 4); out(i + 1) = HexDigits(v & 0xf)
+    }
+    put(1, r); put(3, g); put(5, b)
+    new String(out)
   }
 
   /** the resources a content stream can reach: fonts by name, and form
@@ -1558,13 +1671,13 @@ object PdfLex {
           (ch >= '0' && ch <= '9') || ch == '+' || ch == '-' || ch == '.') {
         stack += parseOperand()
       } else {
-        val op = c.keyword()
-        if (op.isEmpty) c.p += 1 // skip stray delimiter (defensive)
-        else op match {
-          case "q" =>
+        val op = c.opCode()
+        if (op == 0) c.p += 1 // skip stray delimiter (defensive)
+        else (op: @annotation.switch) match {
+          case Op_q =>
             gsStack += GState(fill, font, size, leading,
               charSpacing, wordSpacing, hscale, ctmX, ctmY)
-          case "Q" => if (gsStack.nonEmpty) {
+          case Op_Q => if (gsStack.nonEmpty) {
             val g = gsStack.last
             gsStack.dropRightInPlace(1)
             // flush pending show pieces BEFORE the CTM translation is
@@ -1576,7 +1689,7 @@ object PdfLex {
             charSpacing = g.charSpacing; wordSpacing = g.wordSpacing
             hscale = g.hscale; ctmX = g.ctmX; ctmY = g.ctmY
           }
-          case "cm" if stack.length >= 6 =>
+          case Op_cm if stack.length >= 6 =>
             val a = num(stack(stack.length - 6)); val b = num(stack(stack.length - 5))
             val cc = num(stack(stack.length - 4)); val d = num(stack(stack.length - 3))
             if (a != 1.0 || b != 0.0 || cc != 0.0 || d != 1.0)
@@ -1585,36 +1698,36 @@ object PdfLex {
             flush()
             ctmX += num(stack(stack.length - 2))
             ctmY += num(stack.last)
-          case "rg" if stack.length >= 3 =>
+          case Op_rg if stack.length >= 3 =>
             fill = hexColor(num(stack(stack.length - 3)),
               num(stack(stack.length - 2)), num(stack.last))
-          case "g" if stack.nonEmpty =>
+          case Op_g if stack.nonEmpty =>
             val v = num(stack.last); fill = hexColor(v, v, v)
-          case "BT" =>
+          case Op_BT =>
             flush()
             lineX = 0; lineY = 0; curX = 0; curY = 0
-          case "ET" => flush()
-          case "Tf" if stack.length >= 2 =>
+          case Op_ET => flush()
+          case Op_Tf if stack.length >= 2 =>
             val fname = stack(stack.length - 2) match {
               case PName(n) => n
               case other => throw new PdfError(s"Tf font operand $other")
             }
             font = fonts.getOrElse(fname, throw new PdfError(s"unknown font /$fname"))
             size = num(stack.last)
-          case "TL" if stack.nonEmpty => leading = num(stack.last)
-          case "Tc" if stack.nonEmpty => charSpacing = num(stack.last)
-          case "Tw" if stack.nonEmpty => wordSpacing = num(stack.last)
-          case "Tz" if stack.nonEmpty => hscale = num(stack.last) / 100.0
-          case "Td" if stack.length >= 2 =>
+          case Op_TL if stack.nonEmpty => leading = num(stack.last)
+          case Op_Tc if stack.nonEmpty => charSpacing = num(stack.last)
+          case Op_Tw if stack.nonEmpty => wordSpacing = num(stack.last)
+          case Op_Tz if stack.nonEmpty => hscale = num(stack.last) / 100.0
+          case Op_Td if stack.length >= 2 =>
             flush()
             lineX += num(stack(stack.length - 2)); lineY += num(stack.last)
             curX = lineX; curY = lineY
-          case "TD" if stack.length >= 2 =>
+          case Op_TD if stack.length >= 2 =>
             flush()
             leading = -num(stack.last)
             lineX += num(stack(stack.length - 2)); lineY += num(stack.last)
             curX = lineX; curY = lineY
-          case "Tm" if stack.length >= 6 =>
+          case Op_Tm if stack.length >= 6 =>
             // same subset contract as cm: only pure-translation text
             // matrices are honored. Silently reading just e,f from
             // `a b c d e f Tm` would pass scaled/rotated text through
@@ -1628,13 +1741,13 @@ object PdfLex {
             flush()
             lineX = num(stack(stack.length - 2)); lineY = num(stack.last)
             curX = lineX; curY = lineY
-          case "T*" => nextLine()
-          case "Tj" if stack.nonEmpty =>
+          case Op_TStar => nextLine()
+          case Op_Tj if stack.nonEmpty =>
             stack.last match {
               case PStr(s) => show(s)
               case other => throw new PdfError(s"Tj operand $other")
             }
-          case "TJ" if stack.nonEmpty =>
+          case Op_TJ if stack.nonEmpty =>
             stack.last match {
               case PArr(items) => items.foreach {
                 case PStr(s) => show(s)
@@ -1643,13 +1756,13 @@ object PdfLex {
               }
               case other => throw new PdfError(s"TJ operand $other")
             }
-          case "'" if stack.nonEmpty =>
+          case Op_Quote if stack.nonEmpty =>
             nextLine()
             stack.last match {
               case PStr(s) => show(s)
               case other => throw new PdfError(s"' operand $other")
             }
-          case "\"" if stack.length >= 3 =>
+          case Op_DQuote if stack.length >= 3 =>
             // aw ac string ": set word then char spacing, next line, show
             wordSpacing = num(stack(stack.length - 3))
             charSpacing = num(stack(stack.length - 2))
@@ -1658,7 +1771,7 @@ object PdfLex {
               case PStr(s) => show(s)
               case other => throw new PdfError(s"\" operand $other")
             }
-          case "Do" if stack.nonEmpty =>
+          case Op_Do if stack.nonEmpty =>
             stack.last match {
               case PName(n) => res.form(n) match {
                 case Some((data, childRes, dx, dy)) =>
@@ -1676,7 +1789,7 @@ object PdfLex {
               }
               case other => throw new PdfError(s"Do operand $other")
             }
-          case "BI" =>
+          case Op_BI =>
             // inline image (§8.9.7): skip `key value` pairs to ID, then
             // raw binary until a whitespace-delimited EI — the binary may
             // contain bytes that would derail the operand parser

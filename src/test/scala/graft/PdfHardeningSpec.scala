@@ -1,5 +1,6 @@
 package graft
 
+import graft.MiniPdf.{miniPdf, texts}
 import graft.pdfxml.PdfLex
 import graft.pdfxml.PdfLex.PdfError
 import graft.spark.ExtractTurn
@@ -12,11 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * operands, and the Q-restore flush.
   */
 class PdfHardeningSpec extends AnyFunSuite {
-
-  private def texts(pdf: Array[Byte]): Vector[(String, Int, Int, Int)] =
-    PdfLex.toNodes(pdf).flatMap(_.children.filter(_.tag == "TEXT")
-      .map(t => (t.value, t.attr("LEFT").toInt, t.attr("TOP").toInt,
-        t.attr("WIDTH").toInt)).toVector)
 
   test("scaled Tm is refused, not silently read as translation") {
     val content =
@@ -114,34 +110,5 @@ class PdfHardeningSpec extends AnyFunSuite {
     val (topAA, topBB) = (got(0)._3, got(1)._3)
     // ty = -17 moves AA down the page 17px relative to BB's restored CTM
     assert(topAA == topBB + 17, got)
-  }
-
-  // ---- helpers (PdfContentSpec's classic mini builder) --------------------
-
-  private def miniPdf(content: String): Array[Byte] = {
-    val widths = Seq.fill(95)("583.333333").mkString("[ ", " ", " ]")
-    build(Vector(
-      "<< /Type /Catalog /Pages 2 0 R >>",
-      "<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>",
-      "<< /Type /Page /Parent 2 0 R /MediaBox [ 0 0 918 1188 ] " +
-        "/Resources << /Font << /F0 4 0 R >> >> /Contents 5 0 R >>",
-      "<< /Type /Font /Subtype /Type1 /BaseFont /Courier /FirstChar 32 " +
-        s"/LastChar 126 /Widths $widths >>",
-      s"<< /Length ${content.length} >>\nstream\n" + content + "\nendstream"))
-  }
-
-  private def build(objs: Vector[String]): Array[Byte] = {
-    val sb = new StringBuilder("%PDF-1.4\n")
-    val offs = new Array[Int](objs.length + 1)
-    objs.zipWithIndex.foreach { case (body, i) =>
-      offs(i + 1) = sb.length
-      sb.append(i + 1).append(" 0 obj\n").append(body).append("\nendobj\n")
-    }
-    val xref = sb.length
-    sb.append("xref\n0 ").append(objs.length + 1).append("\n0000000000 65535 f \n")
-    (1 to objs.length).foreach(n => sb.append(f"${offs(n)}%010d 00000 n \n"))
-    sb.append("trailer\n<< /Size ").append(objs.length + 1)
-      .append(" /Root 1 0 R >>\nstartxref\n").append(xref).append("\n%%EOF\n")
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 }

@@ -52,4 +52,33 @@ class SparkEntryVerifySpec extends AnyFunSuite {
     assert(atRun.startsWith("error:"), atRun)
     assert(Bench.timeQuery(spark, "sf0.001", (s, _) => s.range(3).toDF())._2 == "ok")
   }
+
+  test("q36 digest: duplicated rows do not cancel out of the comparison") {
+    import spark.implicits._
+    val cols = Seq("conv_id", "turn_idx", "text")
+    def rows(xs: (String, Int, String)*) = xs.toDF("conv_id", "turn_idx", "text")
+    val a = ("c1", 0, "a"); val b = ("c1", 1, "b")
+    val c = ("c2", 0, "c"); val d = ("c2", 1, "d")
+    val abc = SparkEntry.rowDigest(rows(a, b, c), cols)
+    assert(abc.getLong(0) == 3L, abc)
+    assert(SparkEntry.rowDigest(rows(c, a, b), cols) == abc)
+    assert(SparkEntry.rowDigest(rows(a, b, d), cols) != abc)
+    // {a, b, c, c} and {a, b, d, d} share count and xor; the sum term
+    // tells them apart
+    val abcc = SparkEntry.rowDigest(rows(a, b, c, c), cols)
+    val abdd = SparkEntry.rowDigest(rows(a, b, d, d), cols)
+    assert(abcc.getLong(0) == abdd.getLong(0) && abcc.getLong(1) == abdd.getLong(1))
+    assert(abcc != abdd, abcc)
+  }
+
+  test("q44 check: a snapshot with no files reads as (0, 0), a mismatch is named") {
+    val aggs = Map(1L -> (10L, 2L))
+    SparkEntry.requireFilesMatchSnapshots(Seq((1L, 10L, 2L), (2L, 0L, 0L)), aggs)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.requireFilesMatchSnapshots(Seq((1L, 10L, 2L), (2L, 5L, 1L)), aggs))
+    assert(e.getMessage.contains("files table rows for snapshot 2 disagree"), e.getMessage)
+    val f = intercept[IllegalArgumentException](
+      SparkEntry.requireFilesMatchSnapshots(Seq((1L, 10L, 3L)), aggs))
+    assert(f.getMessage.contains("files table count for snapshot 1 disagrees"), f.getMessage)
+  }
 }
